@@ -1,19 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC pin: Tables.events' MICROS path casts wall-clock — on a
-      // non-UTC host an unpinned bench would read shifted timestamps
-      // (ADVICE r10); Verify and the test fixture already pin it.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = SparkEntry.envSfDir
+    val spark = SparkEntry.localSession()
     // JVM/codegen/parquet-reader warmup so timings measure plans, not the
     // first-query class-loading spike (~10 s otherwise attributed to
     // whichever query happens to run first).
@@ -226,10 +215,10 @@ object Bench {
     // re-measures the char-level family on a ×50-length corpus derived
     // from this sf's documents table, so the length envelope can never go
     // stale again. The corpus is regenerated when absent (/tmp evaporates
-    // between rounds); partial (`only`-restricted) runs skip the axis, and
-    // SPARK_GRAFT_LONGDOCS=0 disables it. Timing is single-pass — the
-    // axis adjudicates on shuffle bytes/tasks (plan-determined), not on a
-    // gated wall-clock; its rows ride BENCH_DETAIL/PRIOR like any axis.
+    // between rounds); partial (`only`-restricted) runs skip the axis.
+    // Timing is single-pass — the axis adjudicates on shuffle bytes/tasks
+    // (plan-determined), not on a gated wall-clock; its rows ride
+    // BENCH_DETAIL/PRIOR like any axis.
     val charFamily = Seq(
       "q_text_winnowing", "q_dedup_cdc_chunks", "q_text_chunk",
       "q_text_boilerplate", "q_text_fingerprint", "q_text_strip_markup",
@@ -242,8 +231,7 @@ object Bench {
     val ldDir = if (ldBase == "sf0.1") "/tmp/longdocs50"
                 else s"/tmp/longdocs50_$ldBase"
     val ldResults: Seq[(String, (Double, Double, Array[Long]))] =
-      if (!(only.isEmpty &&
-            sys.env.getOrElse("SPARK_GRAFT_LONGDOCS", "1") != "0")) Seq.empty
+      if (only.nonEmpty) Seq.empty
       else try {
         if (!java.nio.file.Files.exists(java.nio.file.Paths.get(
             ldDir, "documents.parquet", "_SUCCESS")))
@@ -311,124 +299,53 @@ object Bench {
         s"$axis\t$k\t${f3(v)}\t${f3(b)}\t" +
           s"${mb(m(0))}\t${mb(m(1))}\t${mb(m(2))}\t${m(3)}"
       }.sorted
-    val written: Map[String, Set[String]] = axes.map { case (a, rs) =>
-      a -> rs.collect { case (k, (v, _, _)) if v >= 0 => k }.toSet
-    }.toMap
-    // Row normalization (r18 verdict #4) + byte-twin wall protection
-    // (r18 verdict #1, per-row since r19 verdict #2) live in
-    // graft.BenchMerge — pure functions, unit-tested by BenchMergeSpec —
-    // so the snapshot policy is pinned by tests instead of only
-    // exercised inside this main. The two artifacts now get DIFFERENT
-    // policies (ADVICE r19): BENCH_PRIOR (the gate input) substitutes
-    // quieter byte-twin priors (flag kept_prior); BENCH_DETAIL always
-    // keeps this run's true walls and only FLAGS discounted rows
-    // (load_suspect) so in-run decay stays visible in the artifact.
-    def pad9(l: String): String = BenchMerge.pad9(l)
-    // persist this run's full telemetry for the next run's regression gate
-    // (best-effort: a read-only working dir must not fail the bench);
-    // __calib__/__calib_end__ ride the same file so the next run can
-    // normalize AND see this run's load bracket. r18: all 8 detail
-    // columns snapshot here too, so next-round wall diffs adjudicate on
-    // shuffle-byte/task deltas instead of wall noise.
-    // Merge, don't replace: a partial run (`only` args) must not erase
-    // the rest of this sf's baseline rows.
-    try {
-      val oldPrior =
-        if (!java.nio.file.Files.exists(priorPath)) Seq.empty[String]
+    // Row normalization (r18 verdict #4), byte-twin wall protection
+    // (r18 verdict #1, per-row since r19 verdict #2) and the per-(axis,
+    // query) merge live in graft.BenchMerge — pure functions, unit-tested
+    // by BenchMergeSpec. The two snapshots get DIFFERENT policies (ADVICE
+    // r19): BENCH_PRIOR (the next run's regression-gate input, with this
+    // run's __calib__ bracket) substitutes quieter byte-twin priors (flag
+    // kept_prior); BENCH_DETAIL (r12 verdict #2: the full per-query
+    // artifact the bounded stdout tail cannot carry) always keeps this
+    // run's true walls and only FLAGS discounted rows (load_suspect) so
+    // in-run decay stays visible. Both are merged, not replaced: a partial
+    // run (`only` args) must not erase the rest of an axis's rows. Writes
+    // are best-effort: a read-only working dir must not fail the bench.
+    val mine = axes.flatMap { case (a, rs) => axisRows(a, rs) }
+    def rewrite(name: String, header: Seq[String],
+                policy: (Seq[String], Seq[String], Boolean) => Seq[String])
+        : Unit = try {
+      val path = repoRoot.resolve(name)
+      val old =
+        if (!java.nio.file.Files.exists(path)) Seq.empty[String]
         else scala.jdk.CollectionConverters.ListHasAsScala(
-          java.nio.file.Files.readAllLines(priorPath)).asScala.toSeq
-          .filter(_.split('\t').length >= 3)
-      val keep = oldPrior
-        .filter { l =>
-          val cols = l.split('\t')
-          !written.get(cols(0)).exists(_.contains(cols(1)))
-        }.map(pad9)
-      val mine = BenchMerge.protectPrior(oldPrior,
-        axes.flatMap { case (a, rs) => axisRows(a, rs) }, sweepLoaded)
-      val body = (keep ++ mine).sorted.mkString("", "\n", "\n")
-      java.nio.file.Files.write(priorPath,
-        body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case e: Exception =>
-      System.err.println(s"[bench] could not write BENCH_PRIOR.tsv: $e")
-    }
-    // Full per-query detail artifact (r12 verdict #2): the driver's
-    // BENCH_r{N}.json keeps only a bounded stdout tail, which at 283
-    // queries truncates ~3/4 of the per-query map — regressions were
-    // invisible in the committed artifact. BENCH_DETAIL.tsv carries every
-    // query's wall/build seconds plus the r16 verdict #3 telemetry columns
-    // (shuffle read/write MB, spill MB, tasks — deterministic per plan, so
-    // regressions adjudicate on bytes, not wall noise), replacing each
-    // measured axis's rows in place (other axes' rows kept, padded to the
-    // 8-col width so the file is never ragged — ADVICE r17).
-    try {
-      val detailPath = repoRoot.resolve("BENCH_DETAIL.tsv")
-      val header = "sf_dir\tquery\twall_s\tbuild_s\t" +
-        "shuf_read_mb\tshuf_write_mb\tspill_mb\ttasks\tflag"
-      val oldDetail =
-        if (!java.nio.file.Files.exists(detailPath)) Seq.empty[String]
-        else scala.jdk.CollectionConverters.ListHasAsScala(
-          java.nio.file.Files.readAllLines(detailPath)).asScala.toSeq
-          .filter { l =>
-            val cols = l.split('\t')
-            cols.length >= 4 && cols(0) != "sf_dir"
-          }
-      // merge per-(axis, query) — a partial (`only` args) run must
-      // refresh ONLY its own rows, not erase the rest of the axis's
-      // sweep; every retained row is padded to 8 typed columns (pad8)
-      val keepDetail = oldDetail
-        .filter { l =>
-          val cols = l.split('\t')
-          !written.get(cols(0)).exists(_.contains(cols(1)))
-        }.map(pad9)
-      val mineDetail = BenchMerge.flagDetail(oldDetail,
-        axes.flatMap { case (a, rs) => axisRows(a, rs) }, sweepLoaded)
-      val detailBody = (Seq(header) ++ (keepDetail ++ mineDetail).sorted)
+          java.nio.file.Files.readAllLines(path)).asScala.toSeq
+      val rows = BenchMerge.snapshot(old, mine, policy(_, _, sweepLoaded))
+      java.nio.file.Files.write(path, (header ++ rows)
         .mkString("", "\n", "\n")
-      java.nio.file.Files.write(detailPath,
-        detailBody.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } catch { case e: Exception =>
-      System.err.println(s"[bench] could not write BENCH_DETAIL.tsv: $e")
+      System.err.println(s"[bench] could not write $name: $e")
     }
+    rewrite("BENCH_PRIOR.tsv", Seq.empty, BenchMerge.protectPrior)
+    rewrite("BENCH_DETAIL.tsv", Seq("sf_dir\tquery\twall_s\tbuild_s\t" +
+      "shuf_read_mb\tshuf_write_mb\tspill_mb\ttasks\tflag"),
+      BenchMerge.flagDetail)
     // Full per-query wall map as JSON (r21 verdict #2, ADDITIVE): the
     // driver's PERF channel parses a bounded stdout tail, which the
-    // 411-entry per-query line outgrows — PERF_r20/r21 both ended with
-    // per_query: {} / n_common: 0, so round-over-round comparison
-    // degraded to the single total. The stdout contract below stays
-    // byte-identical; this file is the same truncation-recovery pattern
-    // BENCH_DETAIL.tsv already uses, keyed axis → query → wall seconds,
-    // merged per (axis, query) so partial (`only`) runs refresh only
-    // their own rows. The judge rebuilds the full prev/now table from
-    // the committed file instead of tail archaeology.
+    // 411-entry per-query line outgrows. The stdout contract below stays
+    // byte-identical; this file is keyed axis → query → wall seconds and
+    // merged by BenchMerge.perQuery, which drops a full run's stale keys.
     try {
       val pqPath = repoRoot.resolve("BENCH_PERQUERY.json")
-      val merged = scala.collection.mutable.TreeMap[String,
-        scala.collection.mutable.TreeMap[String, Double]]()
-      if (java.nio.file.Files.exists(pqPath)) {
-        val root = new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(java.nio.file.Files.readAllBytes(pqPath))
-        val axisIt = root.fields()
-        while (axisIt.hasNext) {
-          val ae = axisIt.next()
-          val qmap = merged.getOrElseUpdate(ae.getKey,
-            scala.collection.mutable.TreeMap[String, Double]())
-          val qIt = ae.getValue.fields()
-          while (qIt.hasNext) {
-            val qe = qIt.next()
-            qmap(qe.getKey) = qe.getValue.asDouble()
-          }
-        }
-      }
-      axes.foreach { case (a, rs) =>
-        val qmap = merged.getOrElseUpdate(a,
-          scala.collection.mutable.TreeMap[String, Double]())
-        rs.foreach { case (k, (v, _, _)) => if (v >= 0) qmap(k) = v }
-      }
-      val body = merged.map { case (a, qmap) =>
-        qmap.map { case (k, v) => s"""    "$k": ${f3(v)}""" }
-          .mkString(s"""  "$a": {\n""", ",\n", "\n  }")
-      }.mkString("{\n", ",\n", "\n}\n")
-      java.nio.file.Files.write(pqPath,
-        body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      val old: BenchMerge.Walls =
+        if (!java.nio.file.Files.exists(pqPath)) Map.empty
+        else BenchMerge.parsePerQuery(java.nio.file.Files.readString(pqPath))
+      val measured = axes.map { case (a, rs) =>
+        a -> rs.map { case (k, (v, _, _)) => k -> v }.toMap
+      }.toMap
+      java.nio.file.Files.writeString(pqPath, BenchMerge.renderPerQuery(
+        BenchMerge.perQuery(old, measured, full = only.isEmpty)))
     } catch { case e: Exception =>
       System.err.println(s"[bench] could not write BENCH_PERQUERY.json: $e")
     }

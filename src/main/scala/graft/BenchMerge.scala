@@ -39,6 +39,9 @@ package graft
   *    __calib_end__ probe was added to expose) — but every row that
   *    protectPrior would have discounted carries flag load_suspect so
   *    the divergence is attributable on read.
+  *
+  *  - `snapshot` applies one of those two policies to a whole file, and
+  *    `perQuery` merges the BENCH_PERQUERY.json wall map.
   */
 object BenchMerge {
 
@@ -128,4 +131,59 @@ object BenchMerge {
       }
     }
   }
+
+  /** Next rows (sorted, no header) of a snapshot TSV given its old lines
+    * as read — the header and rows under 3 columns are dropped — and this
+    * run's rows. Old rows whose (axis, query) this run wrote are replaced,
+    * so a partial (`only`) run refreshes only its own rows; the others are
+    * kept, padded. This run's rows go through `policy` (protectPrior or
+    * flagDetail, with the sweep's `loaded` flag applied) against the old
+    * rows.
+    */
+  def snapshot(oldLines: Seq[String], mine: Seq[String],
+               policy: (Seq[String], Seq[String]) => Seq[String])
+      : Seq[String] = {
+    def key(l: String) = l.split('\t').take(2).toSeq
+    val old = oldLines.filter { l =>
+      val c = l.split('\t')
+      c.length >= 3 && c(0) != "sf_dir"
+    }
+    val written = mine.map(key).toSet
+    (old.filterNot(l => written(key(l))).map(pad9) ++ policy(old, mine))
+      .sorted
+  }
+
+  type Walls = Map[String, Map[String, Double]]
+
+  /** Next BENCH_PERQUERY.json map (axis → query → wall seconds).
+    * `measured` holds, per axis this run measured, every query it
+    * attempted, with -1 for a failure; a failed query keeps its old wall.
+    * A full run owns its axes, so an old key it did not attempt (a renamed
+    * or removed query) is dropped. A partial (`only`) run updates only its
+    * own keys. Axes this run did not measure are kept as they are.
+    */
+  def perQuery(old: Walls, measured: Walls, full: Boolean): Walls =
+    measured.foldLeft(old) { case (acc, (axis, walls)) =>
+      val prev = acc.getOrElse(axis, Map.empty[String, Double])
+      val kept = if (full) prev.filter { case (q, _) => walls.contains(q) }
+                 else prev
+      acc.updated(axis, kept ++ walls.filter { case (_, v) => v >= 0 })
+    }
+
+  def parsePerQuery(json: String): Walls = {
+    import scala.jdk.CollectionConverters._
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+      .properties().asScala.map { a =>
+        a.getKey -> a.getValue.properties().asScala
+          .map(q => q.getKey -> q.getValue.asDouble()).toMap
+      }.toMap
+  }
+
+  /** Axes and queries in sorted order, walls to 3 decimals. */
+  def renderPerQuery(m: Walls): String =
+    m.toSeq.sortBy(_._1).map { case (a, qs) =>
+      qs.toSeq.sortBy(_._1).map { case (q, v) =>
+        "    \"" + q + "\": " + "%.3f".formatLocal(java.util.Locale.ROOT, v)
+      }.mkString("  \"" + a + "\": {\n", ",\n", "\n  }")
+    }.mkString("{\n", ",\n", "\n}\n")
 }

@@ -10,15 +10,8 @@ object PlanDump {
     val outDir = java.nio.file.Paths.get(args(0))
     val suffix = args(1)
     val names = args.drop(2)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = SparkEntry.envSfDir
+    val spark = SparkEntry.localSession()
     java.nio.file.Files.createDirectories(outDir)
     names.foreach { n =>
       val fn = SparkEntry.queries(n)

@@ -22,18 +22,34 @@ import org.apache.spark.sql.functions._
   * ~9× the candidate mass, ×30 lineitem the graph family's wedge fan-out.
   */
 object ScaleGen {
+
+  /** Symlink every fixture table but `table` from `src` into `out`, for
+    * generators that rewrite one table and leave the rest as they are.
+    * A link to another target is replaced. The target is absolute and
+    * normalized: a relative `src` would otherwise be resolved relative
+    * to `out` at read time and dangle (ADVICE r17).
+    */
+  def linkOtherTables(src: String, out: String, table: String): Unit =
+    Seq("lineitem", "orders", "customer", "supplier", "part", "nation",
+      "region", "events", "documents", "embeddings")
+      .filter(_ != table).foreach { t =>
+        val link = java.nio.file.Paths.get(out, s"$t.parquet")
+        val target = java.nio.file.Paths.get(src, s"$t.parquet")
+          .toAbsolutePath.normalize
+        val stale = java.nio.file.Files.isSymbolicLink(link) &&
+          java.nio.file.Files.readSymbolicLink(link) != target
+        if (stale) java.nio.file.Files.delete(link)
+        if (stale || !java.nio.file.Files.exists(link,
+            java.nio.file.LinkOption.NOFOLLOW_LINKS))
+          java.nio.file.Files.createSymbolicLink(link, target)
+      }
+
   def main(args: Array[String]): Unit = {
     val (src, out) = (args(0), args(1))
     val docMult = if (args.length > 2) args(2).toInt else 10
     val lineMult = if (args.length > 3) args(3).toInt else 10
     val embMult = if (args.length > 4) args(4).toInt else 5
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
 
     def replicate(table: String, copies: Int, keys: Seq[String]): Unit = {
       val df = spark.read.parquet(s"$src/$table.parquet")
@@ -113,30 +129,13 @@ object ScaleGenEmbed {
     val (src, out) = (args(0), args(1))
     val copies = if (args.length > 2) args(2).toInt else 50
     val eps = if (args.length > 3) args(3).toDouble else 0.02
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     val df = spark.read.parquet(s"$src/embeddings.parquet")
     jitterReplicate(df, copies, eps)
       .repartition(32)
       .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
     println(s"[scalegen-embed] embeddings x$copies (eps=$eps) done")
-    Seq("lineitem", "orders", "customer", "supplier", "part", "nation",
-      "region", "events", "documents").foreach { t =>
-      val link = java.nio.file.Paths.get(out, s"$t.parquet")
-      val target = java.nio.file.Paths.get(src, s"$t.parquet")
-        .toAbsolutePath.normalize
-      val stale = java.nio.file.Files.isSymbolicLink(link) &&
-        java.nio.file.Files.readSymbolicLink(link) != target
-      if (stale) java.nio.file.Files.delete(link)
-      if (stale || !java.nio.file.Files.exists(link,
-          java.nio.file.LinkOption.NOFOLLOW_LINKS))
-        java.nio.file.Files.createSymbolicLink(link, target)
-    }
+    ScaleGen.linkOtherTables(src, out, "embeddings")
     spark.stop()
   }
 }
@@ -159,15 +158,11 @@ object ScaleGenEmbed {
 object ScaleGenOverlap {
   def main(args: Array[String]): Unit = {
     val (out, nDocs) = (args(0), args(1).toInt)
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     import spark.implicits._
-    spark.range(nDocs.toLong).map { id =>
+    // 16 source slices whatever the core count: the round-robin
+    // repartition below places rows by source slice
+    spark.range(0L, nDocs.toLong, 1L, 16).map { id =>
       val c = id / 20
       val unique = (0 until 3).map(k => s"u${id}x$k")
       val cluster = (0 until 18).map(k => s"c${c}t$k")
@@ -212,32 +207,13 @@ object ScaleGenLongDocs {
       .withColumn("n_chars", length(col("text")).cast("long"))
       .repartition(16)
       .write.mode("overwrite").parquet(s"$out/documents.parquet")
-    Seq("lineitem", "orders", "customer", "supplier", "part", "nation",
-      "region", "events", "embeddings").foreach { t =>
-      val link = java.nio.file.Paths.get(out, s"$t.parquet")
-      // Absolute-normalized target: a relative `src` would otherwise be
-      // resolved relative to `out` at READ time and dangle (ADVICE r17).
-      val target = java.nio.file.Paths.get(src, s"$t.parquet")
-        .toAbsolutePath.normalize
-      val stale = java.nio.file.Files.isSymbolicLink(link) &&
-        java.nio.file.Files.readSymbolicLink(link) != target
-      if (stale) java.nio.file.Files.delete(link)
-      if (stale || !java.nio.file.Files.exists(link,
-          java.nio.file.LinkOption.NOFOLLOW_LINKS))
-        java.nio.file.Files.createSymbolicLink(link, target)
-    }
+    ScaleGen.linkOtherTables(src, out, "documents")
   }
 
   def main(args: Array[String]): Unit = {
     val (src, out) = (args(0), args(1))
     val mult = if (args.length > 2) args(2).toInt else 50
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     generate(spark, src, out, mult)
     println(s"[scalegen-longdocs] doc length x$mult at fixed count")
     spark.stop()

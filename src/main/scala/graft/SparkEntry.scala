@@ -26,4 +26,30 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     allQueries.flatMap(q => q.oracle.map(o => q.name -> o)).toMap
+
+  /** Data directory of the Bench / PlanDump mains: `SPARK_GRAFT_SF_DIR`. */
+  def envSfDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** Cores of a local session: `SPARK_GRAFT_CPUS`, default 4. */
+  def envCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt)
+
+  /** The local-session policy every main and the test fixture share:
+    * `local[cores]` with as many shuffle partitions as cores, the session
+    * time zone pinned to UTC (Tables.events' MICROS path casts wall-clock,
+    * so an unpinned session on a non-UTC host reads shifted timestamps),
+    * no UI, and WARN logging.
+    */
+  def localSession(cores: Int = envCpus,
+                   warehouseDir: Option[String] = None): SparkSession = {
+    val b = SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+    warehouseDir.foreach(b.config("spark.sql.warehouse.dir", _))
+    val spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -4586,7 +4586,7 @@ object Analytics {
         // r21: ONE okey-keyed exchange shared by both self-join sides
         // (the winnowing repartition pattern): without it each side
         // planned its own ENSURE_REQUIREMENTS exchange and the whole
-        // distinct+window+brand-join chain executed twice (JobProbe:
+        // distinct+window+brand-join chain executed twice (per-job bytes:
         // two identical 7.7 MB exchange-write jobs).
         .repartition(col("okey"))
       val grp = itemsC.select(col("okey"), col("part").as("pa"),
@@ -4598,7 +4598,7 @@ object Analytics {
         // r21: pin the brand grid — it is ≤ |brands|² rows (625 at any
         // scale) but its lineage is the whole wedge self-join, and the
         // four consumers below (m, ec, both strength arms) re-executed
-        // that chain: JobProbe showed the wedge jobs running 4× (~60 MB
+        // that chain: per-job bytes showed the wedge jobs running 4× (~60 MB
         // of the query's reads). One eager checkpoint, one execution.
         .localCheckpoint(true)
       val m = grp.agg(sum(col("w")).as("m"))
@@ -5040,7 +5040,7 @@ object Analytics {
         // r21: pin the contingency cells — grid-bounded (|features| ×
         // |levels| × 2 rows) but its lineage is the 5-way stacked
         // corpus scan, which the four consumers below (rt/ct/nt/mi)
-        // re-executed (JobProbe: two full stack-scan jobs per run).
+        // re-executed (per-job bytes: two full stack-scan jobs per run).
         .localCheckpoint(true)
       val rt = cells.groupBy("feature", "xv").agg(sum(col("o")).as("r"))
       val ct = cells.groupBy("feature", "y").agg(sum(col("o")).as("c"))

@@ -42,7 +42,10 @@ private[plans] object CharKernel {
   final val Pows: Array[Long] = Array.iterate(1L, K)(_ * 131L).reverse
 
   /** Decode code points; empty input decodes to n = 0 (callers replicate
-    * split('')'s [''] singleton semantics explicitly).
+    * split('')'s [''] singleton semantics explicitly). A multi-byte
+    * sequence truncated by the end of the string decodes with its missing
+    * continuation bytes read as 0 payload bits: the lead byte's payload
+    * shifted into place (bytes 0x61 0xE2 decode to 0x61, 0x2000).
     */
   def codePoints(s: UTF8String): Array[Int] = {
     val n = s.numChars()
@@ -50,6 +53,8 @@ private[plans] object CharKernel {
     var i = 0
     var off = 0
     val bytes = s.getBytes
+    // continuation payload of byte j, 0 past the end of the string
+    def cont(j: Int): Int = if (j < bytes.length) bytes(j) & 0x3f else 0
     while (i < n) {
       val b0 = bytes(off) & 0xff
       if (b0 < 0x80) { out(i) = b0; off += 1 }
@@ -59,15 +64,14 @@ private[plans] object CharKernel {
         // UTF8String from byte 0 per char — O(n²) on non-ASCII docs).
         // Well-formed UTF-8 (the only thing split() feeds) decodes to
         // the same code point the String round-trip produced.
-        out(i) = ((b0 & 0x1f) << 6) | (bytes(off + 1) & 0x3f)
+        out(i) = ((b0 & 0x1f) << 6) | cont(off + 1)
         off += 2
       } else if (b0 < 0xf0) {
-        out(i) = ((b0 & 0x0f) << 12) | ((bytes(off + 1) & 0x3f) << 6) |
-          (bytes(off + 2) & 0x3f)
+        out(i) = ((b0 & 0x0f) << 12) | (cont(off + 1) << 6) | cont(off + 2)
         off += 3
       } else {
-        out(i) = ((b0 & 0x07) << 18) | ((bytes(off + 1) & 0x3f) << 12) |
-          ((bytes(off + 2) & 0x3f) << 6) | (bytes(off + 3) & 0x3f)
+        out(i) = ((b0 & 0x07) << 18) | (cont(off + 1) << 12) |
+          (cont(off + 2) << 6) | cont(off + 3)
         off += 4
       }
       i += 1

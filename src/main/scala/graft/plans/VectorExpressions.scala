@@ -292,7 +292,8 @@ case class BandPrefixCollides(first: Expression, second: Expression,
   * vertical edges hit the exact zero-product term), so crossings — and
   * the odd/even verdict — are bit-identical to the HOF formulation.
   * Edges shorter than 2 points or with sub-2 coordinate arity count 0,
-  * matching element_at's null-propagation-to-false in the CASE.
+  * matching element_at's null-propagation-to-false in the CASE, and so
+  * does a null edge, point or coordinate.
   */
 case class RayCrossings(first: Expression, second: Expression,
                         third: Expression)
@@ -326,10 +327,10 @@ case class RayCrossings(first: Expression, second: Expression,
     val n = edges.numElements()
     while (i < n) {
       val e = edges.getArray(i)
-      if (e.numElements() >= 2) {
+      if (e != null && e.numElements() >= 2) {
         val p1 = e.getArray(0)
         val p2 = e.getArray(1)
-        if (p1.numElements() >= 2 && p2.numElements() >= 2) {
+        if (RayCrossings.isPoint(p1) && RayCrossings.isPoint(p2)) {
           val x1 = p1.getDouble(0); val y1 = p1.getDouble(1)
           val x2 = p2.getDouble(0); val y2 = p2.getDouble(1)
           if ((y1 > py) != (y2 > py) &&
@@ -360,12 +361,13 @@ case class RayCrossings(first: Expression, second: Expression,
          |for (int $i = 0; $i < $n; $i++) {
          |  org.apache.spark.sql.catalyst.util.ArrayData $e =
          |    $es.getArray($i);
-         |  if ($e.numElements() >= 2) {
+         |  if ($e != null && $e.numElements() >= 2) {
          |    org.apache.spark.sql.catalyst.util.ArrayData $p1 =
          |      $e.getArray(0);
          |    org.apache.spark.sql.catalyst.util.ArrayData $p2 =
          |      $e.getArray(1);
-         |    if ($p1.numElements() >= 2 && $p2.numElements() >= 2) {
+         |    if (graft.plans.RayCrossings.isPoint($p1) &&
+         |        graft.plans.RayCrossings.isPoint($p2)) {
          |      double $x1 = $p1.getDouble(0); double $y1 = $p1.getDouble(1);
          |      double $x2 = $p2.getDouble(0); double $y2 = $p2.getDouble(1);
          |      if (($y1 > $py) != ($y2 > $py) &&
@@ -383,6 +385,12 @@ case class RayCrossings(first: Expression, second: Expression,
       newFirst: Expression, newSecond: Expression,
       newThird: Expression): RayCrossings =
     copy(first = newFirst, second = newSecond, third = newThird)
+}
+
+object RayCrossings {
+  /** A non-null point with non-null x and y. */
+  def isPoint(p: ArrayData): Boolean =
+    p != null && p.numElements() >= 2 && !p.isNullAt(0) && !p.isNullAt(1)
 }
 
 object VectorFunctions {

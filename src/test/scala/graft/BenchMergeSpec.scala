@@ -175,4 +175,62 @@ class BenchMergeSpec extends AnyFunSuite {
       assert(!kept.contains("q3"))
     }
   }
+
+  test("snapshot replaces the rows this run wrote, keeps the rest padded " +
+      "and drops a header") {
+    val old = Seq("sf_dir\tquery\twall_s",
+      row("/a", "q1", "1.000"), row("/a", "q2", "2.000"),
+      "/b\tq1\t3.000", "/a\tshort")
+    val mine = Seq(row("/a", "q1", "0.900"))
+    val out = BenchMerge.snapshot(old, mine,
+      BenchMerge.flagDetail(_, _, loaded = false))
+    assert(out == Seq(BenchMerge.pad9("/b\tq1\t3.000"),
+      BenchMerge.pad9(row("/a", "q1", "0.900")),
+      BenchMerge.pad9(row("/a", "q2", "2.000"))).sorted)
+  }
+
+  test("snapshot applies the policy against the old rows") {
+    val old = Seq(row("/a", "q1", "1.000"), row("/a", "q2", "1.000"))
+    val mine = Seq(row("/a", "q1", "2.000"))
+    val prior = BenchMerge.snapshot(old, mine,
+      BenchMerge.protectPrior(_, _, loaded = false))
+    assert(prior == Seq(flagged(row("/a", "q1", "1.000"), "kept_prior"),
+      BenchMerge.pad9(row("/a", "q2", "1.000"))))
+    val detail = BenchMerge.snapshot(old, mine,
+      BenchMerge.flagDetail(_, _, loaded = false))
+    assert(detail == Seq(flagged(row("/a", "q1", "2.000"), "load_suspect"),
+      BenchMerge.pad9(row("/a", "q2", "1.000"))))
+  }
+
+  test("perQuery: a full run drops renamed and removed queries, keeps a " +
+      "failed query's old wall and other axes") {
+    val old = Map(
+      "/a" -> Map("q_old_name" -> 1.0, "q_removed" -> 2.0, "q_keep" -> 3.0,
+        "q_failed" -> 4.0),
+      "/b" -> Map("q_old_name" -> 5.0))
+    val measured = Map(
+      "/a" -> Map("q_new_name" -> 1.5, "q_keep" -> 2.5, "q_failed" -> -1.0))
+    val out = BenchMerge.perQuery(old, measured, full = true)
+    assert(out == Map(
+      "/a" -> Map("q_new_name" -> 1.5, "q_keep" -> 2.5, "q_failed" -> 4.0),
+      "/b" -> Map("q_old_name" -> 5.0)))
+  }
+
+  test("perQuery: a partial run only updates its own keys") {
+    val old = Map("/a" -> Map("q1" -> 1.0, "q2" -> 2.0))
+    val out = BenchMerge.perQuery(old,
+      Map("/a" -> Map("q2" -> 0.5, "q3" -> 3.0, "q4" -> -1.0)),
+      full = false)
+    assert(out == Map("/a" -> Map("q1" -> 1.0, "q2" -> 0.5, "q3" -> 3.0)))
+  }
+
+  test("perQuery JSON renders sorted and parses back") {
+    val m = Map("/b" -> Map("q2" -> 2.0, "q1" -> 0.1234),
+      "/a" -> Map("q" -> 3.0))
+    val json = BenchMerge.renderPerQuery(m)
+    assert(json == "{\n  \"/a\": {\n    \"q\": 3.000\n  },\n" +
+      "  \"/b\": {\n    \"q1\": 0.123,\n    \"q2\": 2.000\n  }\n}\n")
+    assert(BenchMerge.parsePerQuery(json) ==
+      Map("/a" -> Map("q" -> 3.0), "/b" -> Map("q1" -> 0.123, "q2" -> 2.0)))
+  }
 }

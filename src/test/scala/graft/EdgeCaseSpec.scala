@@ -209,4 +209,58 @@ class EdgeCaseSpec extends AnyFunSuite with SparkFixture {
     assert(e.getMessage.contains("containsNull"),
       s"expected the containsNull rejection, got: ${e.getMessage}")
   }
+
+  test("ray_crossings counts a null edge, point or coordinate as 0 " +
+      "crossings, with whole-stage codegen on and off") {
+    graft.plans.VectorFunctions.register(spark)
+    // the unit square around (0.5, 0.5) crosses once (the edge x = 1);
+    // CAST(id ...) keeps the edge list out of constant folding
+    val q = spark.range(1).selectExpr("""ray_crossings(array(
+        array(array(CAST(id AS DOUBLE), 0D), array(1D, 0D)),
+        array(array(1D, 0D), array(1D, 1D)),
+        array(array(1D, 1D), array(0D, 1D)),
+        array(array(0D, 1D), array(0D, 0D)),
+        NULL,
+        array(NULL, array(1D, 1D)),
+        array(array(1D, CAST(NULL AS DOUBLE)), array(1D, 1D))),
+      0.5D, 0.5D) AS c""")
+    val variants = Seq(
+      Seq("spark.sql.codegen.wholeStage" -> "true"),
+      Seq("spark.sql.codegen.wholeStage" -> "false"),
+      // interpreted evaluation: the nullSafeEval path
+      Seq("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    for (confs <- variants) {
+      val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try assert(q.collect()(0).getInt(0) == 1, confs.toString)
+      finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None)    => spark.conf.unset(k)
+      }
+    }
+  }
+
+  test("char kernels decode a truncated UTF-8 tail instead of reading " +
+      "past the end") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.plans.{CdcChunks, WinnowFingerprints}
+    val bytes = Array[Byte](0x61, 0xE2.toByte)
+    val truncated = UTF8String.fromBytes(bytes)
+    def winnow(s: UTF8String) = WinnowFingerprints(Literal(s, StringType))
+      .eval().asInstanceOf[ArrayData].toLongArray.toSeq
+    // the missing continuation bytes read as 0 bits: U+2000 after the 'a'
+    assert(winnow(truncated) == winnow(UTF8String.fromString("a\u2000")))
+    val chunks = CdcChunks(Literal(truncated, StringType)).eval()
+      .asInstanceOf[ArrayData]
+    assert(chunks.numElements() == 1)
+    val chunk = chunks.getStruct(0, 2)
+    val md5 = java.security.MessageDigest.getInstance("MD5").digest(bytes)
+      .map(b => f"${b & 0xff}%02x").mkString
+    assert(chunk.getUTF8String(0).toString == md5)
+    assert(chunk.getLong(1) == 2L)
+  }
 }

@@ -4,18 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared session for the whole forked test JVM. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = SparkEntry.localSession(4,
+    Some(java.nio.file.Files.createTempDirectory("graft-wh").toString))
 }
 
 trait SparkFixture {
