@@ -38,7 +38,10 @@ object SparkEntry {
     * `local[cores]` with as many shuffle partitions as cores, the session
     * time zone pinned to UTC (Tables.events' MICROS path casts wall-clock,
     * so an unpinned session on a non-UTC host reads shifted timestamps),
-    * no UI, and WARN logging.
+    * ANSI on (the default, but SPARK_ANSI_SQL_MODE can flip it, and then
+    * a long sum overflow wraps silently instead of raising), the engine's
+    * functions injected into every session by GraftExtensions, no UI,
+    * and WARN logging.
     */
   def localSession(cores: Int = envCpus,
                    warehouseDir: Option[String] = None): SparkSession = {
@@ -46,6 +49,9 @@ object SparkEntry {
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.ansi.enabled", "true")
+      .config("spark.sql.extensions",
+        classOf[graft.plans.GraftExtensions].getName)
       .config("spark.ui.enabled", "false")
     warehouseDir.foreach(b.config("spark.sql.warehouse.dir", _))
     val spark = b.getOrCreate()

@@ -118,7 +118,6 @@ object Analytics {
   val qKnnClassify = Q(
     "q_knn_classify",
     (s, dir) => {
-      graft.plans.VectorFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
         .withColumn("ns", expr("vec_dot(embedding, embedding)"))
       val probes = emb.where(col("vec_id") < 20)
@@ -651,7 +650,6 @@ object Analytics {
       // r21: ShingleXxh64Set kernel — same seed-42 hashes, per-doc
       // distinct replaces the interpreted shingle lambda AND the
       // (doc_id, h) distinct exchange (see dedupBase).
-      graft.plans.VectorFunctions.register(s)
       val sh = Tables.documents(s, dir)
         .select(col("doc_id"), explode(
           expr("shingle_xxh64_set(split(text, ' '))")).as("h"))

@@ -127,8 +127,7 @@ object Llm {
   private def firstCollisionOnly(pairs: DataFrame): DataFrame =
     // native early-exit loop (BandPrefixCollides), not the interpreted
     // exists(zip_with(slice…)) HOF chain — evaluated once per candidate
-    // pair, it was the ANN query's whole wall at sf0.1 (r18); callers
-    // register it via VectorFunctions.register
+    // pair, it was the ANN query's whole wall at sf0.1 (r18)
     pairs.where(!expr("band_prefix_collides(ka, kb, band)"))
 
   // ---------------------------------------------------------------- dedup
@@ -261,7 +260,6 @@ object Llm {
           // on the hash as before) — the interpreted transform lambda
           // AND the (doc_id, h) distinct EXCHANGE are gone: per-doc
           // distinct keyed by doc_id IS the global distinct.
-          graft.plans.VectorFunctions.register(s)
           val sh = reps
             .select(col("doc_id"), explode(
               expr("shingle_xxh64_set(split(text, ' '))")).as("h"))
@@ -400,7 +398,6 @@ object Llm {
   val qEmbedLabelOutliers = Q(
     "q_embed_label_outliers",
     (s, dir) => {
-      graft.plans.VectorFunctions.register(s)
       val ex = Tables.embeddings(s, dir)
         .select(col("label"), posexplode(col("embedding")))
         .select(col("label"), col("pos").cast(IntegerType).as("dim"),
@@ -1319,7 +1316,6 @@ object Llm {
       // explode + groupBy exchange is gone — a MinHash signature is a
       // per-document value, the map-side-signature property that makes
       // it the 100 TB path. n = size(hs) = the old count(1).
-      graft.plans.VectorFunctions.register(s)
       val r = MinhashK / MinhashBands
       val ab = (0 until MinhashK).map(mhAB)
       val sigsFn = graft.plans.VectorFunctions.registerMinhashSigs(
@@ -1717,7 +1713,6 @@ object Llm {
   val qEmbedSemdedup = Q(
     "q_embed_semdedup",
     (s, dir) => {
-      graft.plans.VectorFunctions.register(s)
       val ex = Tables.embeddings(s, dir)
         .select(col("vec_id"), col("label"), posexplode(col("embedding")))
         .select(col("vec_id"), col("label"),
@@ -1800,7 +1795,6 @@ object Llm {
   val qEmbedCenter = Q(
     "q_embed_center",
     (s, dir) => {
-      graft.plans.VectorFunctions.register(s)
       val ex = Tables.embeddings(s, dir)
         .select(posexplode(col("embedding")))
         .select(col("pos").cast(IntegerType).as("dim"),
@@ -1936,7 +1930,6 @@ object Llm {
   val qSimCosineQuantized = Q(
     "q_sim_cosine_quantized",
     (s, dir) => {
-      graft.plans.VectorFunctions.register(s)
       val recon = quantizeEmbeddings(Tables.embeddings(s, dir))
         .groupBy("vec_id", "label")
         .agg(expr("transform(array_sort(collect_list(struct(dim, recon)))," +
@@ -1994,7 +1987,6 @@ object Llm {
   val qSimCosineTopk = Q(
     "q_sim_cosine_topk",
     (s, dir) => {
-      graft.plans.VectorFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
         .withColumn("ns", expr("vec_dot(embedding, embedding)"))
       val probes = emb.where(col("vec_id") < 10)
@@ -2057,7 +2049,6 @@ object Llm {
     * thresholds than the t2 query's 0.4.
     */
   def cosineNearDupPairs(embIn: DataFrame, threshold: Double): DataFrame = {
-    graft.plans.VectorFunctions.register(embIn.sparkSession)
     val emb = embIn.withColumn("ns", expr("vec_dot(embedding, embedding)"))
     // The pure theta join (a < b) plans as BroadcastNestedLoopJoin: the
     // build side broadcasts, the STREAMED side's parallelism is its
@@ -2160,7 +2151,6 @@ object Llm {
   def cosineAnnLshPairs(embIn: DataFrame, threshold: Double,
                         bands: Int = LshBands,
                         rows: Int = LshRows): DataFrame = {
-    graft.plans.VectorFunctions.register(embIn.sparkSession)
     val dims = 64
     val emb = embIn.withColumn("ns", expr("vec_dot(embedding, embedding)"))
     // band keys = bit-folds of the plane-projection signs, all computed by
@@ -2271,7 +2261,6 @@ object Llm {
                        k: Int = 16): (DataFrame, DataFrame) = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
-    graft.plans.VectorFunctions.register(s)
     val cellsOut =
       graft.sources.SourcesSinks.dirKeyedTempPath(s, dir, "ivf_cells")
     val centOut =
@@ -2344,7 +2333,6 @@ object Llm {
   val qSimGraphBeam = Q(
     "q_sim_graph_beam",
     (s, dir) => {
-      graft.plans.VectorFunctions.register(s)
       import org.apache.spark.sql.expressions.Window
       val (kNbr, beamW, hops) = (16, 12, 5)
       val emb = Tables.embeddings(s, dir)
@@ -2448,7 +2436,6 @@ object Llm {
     * (DedupRecallSpec, ParitySpec) keep pinning the raw probe results.
     */
   private[graft] def ivfProbeTopk(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.VectorFunctions.register(s)
     val nprobe = 4
     val (assigned, centroids) = ivfIndex(s, dir)
     val probes = assigned.where(col("vec_id") < 10)
@@ -2503,7 +2490,6 @@ object Llm {
   val qSimCosineIvf = Q(
     "q_sim_cosine_ivf",
     (s, dir) => {
-      graft.plans.VectorFunctions.register(s)
       val ivf = ivfProbeTopk(s, dir)
       val emb = Tables.embeddings(s, dir)
         .withColumn("ns", expr("vec_dot(embedding, embedding)"))
@@ -3210,7 +3196,6 @@ object Llm {
     // all gone; the plan is scan → project → sort. ×50 long-doc axis:
     // 13.8 s → map-bound; pinned vs the old formulation by R21OptSpec.
     (s, dir) => {
-      graft.plans.VectorFunctions.register(s)
       // r22 (verdict #3): filter on the CHEAP pushable predicate instead
       // of size(kernel) > 0 — the pushed-down filter was re-evaluating
       // the md5 kernel once per row below the project (2 kernel
@@ -3337,7 +3322,6 @@ object Llm {
       // transform AND the string-keyed distinct exchange (per-doc
       // distinct on the hash — the same collision acceptance as above,
       // now applied one step earlier).
-      graft.plans.VectorFunctions.register(s)
       val ss = Tables.documents(s, dir)
         .select(col("doc_id"), explode(
           expr("shingle_xxh64_set(split(text, ' '))")).as("shingle"))
@@ -4660,7 +4644,6 @@ object Llm {
   val qArrayStats = Q(
     "q_array_stats",
     (s, dir) => {
-      graft.plans.VectorFunctions.register(s)
       Tables.embeddings(s, dir)
         .withColumn("dim", size(col("embedding")))
         .withColumn("norm",
@@ -5152,7 +5135,6 @@ object Llm {
   val qSimMaxsim = Q(
     "q_sim_maxsim",
     (s, dir) => {
-      graft.plans.VectorFunctions.register(s)
       val emb = Tables.embeddings(s, dir)
         .withColumn("ns", expr("vec_dot(embedding, embedding)"))
       val probes = emb.where(col("vec_id") < 8)
@@ -5238,7 +5220,6 @@ object Llm {
       // interpreted HOF chain built ~6 intermediate arrays per doc and
       // was 5-10 s of the ×50 long-doc axis; the kernel walks the
       // UTF-8 bytes once per doc.
-      graft.plans.VectorFunctions.register(s)
       val chunks = docs
         .select(col("doc_id"), explode(expr("cdc_chunks(text)")).as("c"))
         .select(col("doc_id"), col("c.ch").as("ch"),
@@ -5331,7 +5312,6 @@ object Llm {
       // least over 4 try_element_ats → array_distinct) was interpreted
       // per position and built ~6 arrays per doc: 52-67 s of the ×50
       // long-doc axis, the suite's slowest single stage.
-      graft.plans.VectorFunctions.register(s)
       val fps = Tables.documents(s, dir)
         .select(col("doc_id"), explode(expr("winnow_fps(text)")).as("fp"))
         // ONE fp-keyed exchange of the small (doc_id, fp) rows, reused
@@ -5475,7 +5455,6 @@ object Llm {
       // ~25-byte strings. The distinct here is SOURCE-level (shingles
       // shared across a source's docs), so the exchange remains — only
       // its payload shrinks.
-      graft.plans.VectorFunctions.register(s)
       val sh = Tables.documents(s, dir)
         .select(col("source"), explode(
           expr("shingle_xxh64_set(split(text, ' '))")).as("shingle"))

@@ -2142,10 +2142,13 @@ object Relational {
       // suppliers per part: ~80 parts/supplier at every SF), so the sum
       // is ≤ ~10¹⁴·k — 2⁶³ overflows only past ~6.4 M common neighbors
       // per pair, 5 orders of magnitude above the schema's degree
-      // ceiling. make_dec12 reconstructs the EXACT same DECIMAL(38,12)
-      // (same unscaled value, same scale) the old sum(decimal) produced,
-      // so ordering, ties and aa_score are bit-identical.
-      graft.plans.VectorFunctions.register(s)
+      // ceiling. On another degree distribution an overflow is loud, not
+      // a wrapped total: the session's ANSI pin (SparkEntry.localSession)
+      // makes sum(long) raise ARITHMETIC_OVERFLOW (pinned by
+      // EdgeCaseSpec). make_dec12 reconstructs the EXACT same
+      // DECIMAL(38,12) (same unscaled value, same scale) the old
+      // sum(decimal) produced, so ordering, ties and aa_score are
+      // bit-identical.
       val und = graphUnd(s, dir)
       val w = graphDeg(s, dir)
         .where(pmod(col("src"), lit(2)) === 0 && col("deg") >= 2)

@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -42,9 +43,14 @@ private[plans] object CharKernel {
   final val Pows: Array[Long] = Array.iterate(1L, K)(_ * 131L).reverse
 
   /** Decode code points; empty input decodes to n = 0 (callers replicate
-    * split('')'s [''] singleton semantics explicitly). A multi-byte
-    * sequence truncated by the end of the string decodes with its missing
-    * continuation bytes read as 0 payload bits: the lead byte's payload
+    * split('')'s [''] singleton semantics explicitly). Each char's width is
+    * `UTF8String.numBytesForFirstByte`, the table `numChars` counts with,
+    * so a malformed lead byte (a stray continuation byte 0x80-0xBF, 0xC0,
+    * 0xC1 or 0xF5-0xFF) is one 1-byte char and the offset never drifts
+    * past the end. The payload decodes as `UTF8String.codePointFrom` does
+    * (a 1-byte non-ASCII char keeps its low 7 bits), except that a
+    * multi-byte sequence truncated by the end of the string reads its
+    * missing continuation bytes as 0 payload bits: the lead byte's payload
     * shifted into place (bytes 0x61 0xE2 decode to 0x61, 0x2000).
     */
   def codePoints(s: UTF8String): Array[Int] = {
@@ -58,21 +64,19 @@ private[plans] object CharKernel {
     while (i < n) {
       val b0 = bytes(off) & 0xff
       if (b0 < 0x80) { out(i) = b0; off += 1 }
-      else if (b0 < 0xe0) {
+      else {
         // multi-byte: decode directly from the tracked byte offset
         // (ADVICE r21: the old substring(i, i+1) fallback rescanned the
         // UTF8String from byte 0 per char — O(n²) on non-ASCII docs).
-        // Well-formed UTF-8 (the only thing split() feeds) decodes to
-        // the same code point the String round-trip produced.
-        out(i) = ((b0 & 0x1f) << 6) | cont(off + 1)
-        off += 2
-      } else if (b0 < 0xf0) {
-        out(i) = ((b0 & 0x0f) << 12) | (cont(off + 1) << 6) | cont(off + 2)
-        off += 3
-      } else {
-        out(i) = ((b0 & 0x07) << 18) | (cont(off + 1) << 12) |
-          (cont(off + 2) << 6) | cont(off + 3)
-        off += 4
+        val w = UTF8String.numBytesForFirstByte(bytes(off))
+        out(i) = w match {
+          case 1 => b0 & 0x7f
+          case 2 => ((b0 & 0x1f) << 6) | cont(off + 1)
+          case 3 => ((b0 & 0x0f) << 12) | (cont(off + 1) << 6) | cont(off + 2)
+          case _ => ((b0 & 0x07) << 18) | (cont(off + 1) << 12) |
+            (cont(off + 2) << 6) | cont(off + 3)
+        }
+        off += w
       }
       i += 1
     }
@@ -80,7 +84,10 @@ private[plans] object CharKernel {
   }
 
   /** Byte offset of each codepoint start, plus total length sentinel —
-    * lets chunk md5 slice original bytes on char boundaries.
+    * lets chunk md5 slice original bytes on char boundaries. Widths come
+    * from the same table as `codePoints`; the ASCII test comes first
+    * because calling the table lookup for every byte made this loop
+    * about 4× slower on ASCII text.
     */
   def byteOffsets(s: UTF8String): Array[Int] = {
     val bytes = s.getBytes
@@ -90,9 +97,8 @@ private[plans] object CharKernel {
     var off = 0
     while (i < n) {
       out(i) = off
-      val b0 = bytes(off) & 0xff
-      off += (if (b0 < 0x80) 1 else if (b0 < 0xe0) 2
-              else if (b0 < 0xf0) 3 else 4)
+      val b = bytes(off)
+      off += (if (b >= 0) 1 else UTF8String.numBytesForFirstByte(b))
       i += 1
     }
     out(n) = bytes.length
@@ -138,13 +144,9 @@ case class WinnowFingerprints(child: Expression)
     ArrayType(LongType, containsNull = false)
   override def prettyName: String = "winnow_fps"
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires a string argument, got ${child.dataType.sql}")
+  override def checkInputDataTypes(): TypeCheckResult = TypeCheck(
+    child.dataType == StringType,
+    s"$prettyName requires a string argument, got ${child.dataType.sql}")
 
   override def nullSafeEval(input: Any): Any = {
     val codes = CharKernel.codePoints(input.asInstanceOf[UTF8String])
@@ -196,13 +198,9 @@ case class CdcChunks(child: Expression)
     containsNull = false)
   override def prettyName: String = "cdc_chunks"
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires a string argument, got ${child.dataType.sql}")
+  override def checkInputDataTypes(): TypeCheckResult = TypeCheck(
+    child.dataType == StringType,
+    s"$prettyName requires a string argument, got ${child.dataType.sql}")
 
   private def hex(bytes: Array[Byte]): UTF8String = {
     val digits = "0123456789abcdef"
@@ -310,17 +308,9 @@ case class ShingleXxh64Set(child: Expression)
     ArrayType(LongType, containsNull = false)
   override def prettyName: String = "shingle_xxh64_set"
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-          .TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-          .TypeCheckFailure(
-            s"$prettyName requires array<string>, got ${t.sql}")
-    }
+  override def checkInputDataTypes(): TypeCheckResult = TypeCheck(
+    TypeCheck.isArrayOf(child.dataType, StringType),
+    s"$prettyName requires array<string>, got ${child.dataType.sql}")
 
   override def nullSafeEval(input: Any): Any = {
     val toks = input.asInstanceOf[ArrayData]
@@ -358,17 +348,9 @@ case class ShingleMd5Set(child: Expression, hexLen: Int)
     ArrayType(LongType, containsNull = false)
   override def prettyName: String = "shingle_md5_set"
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-          .TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-          .TypeCheckFailure(
-            s"$prettyName requires array<string>, got ${t.sql}")
-    }
+  override def checkInputDataTypes(): TypeCheckResult = TypeCheck(
+    TypeCheck.isArrayOf(child.dataType, StringType),
+    s"$prettyName requires array<string>, got ${child.dataType.sql}")
 
   override def nullSafeEval(input: Any): Any = {
     val toks = input.asInstanceOf[ArrayData]
@@ -427,17 +409,9 @@ case class MinhashSigs(child: Expression, as: Seq[Long], bs: Seq[Long],
     ArrayType(LongType, containsNull = false)
   override def prettyName: String = "minhash_sigs"
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-          .TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-          .TypeCheckFailure(
-            s"$prettyName requires array<bigint>, got ${t.sql}")
-    }
+  override def checkInputDataTypes(): TypeCheckResult = TypeCheck(
+    TypeCheck.isArrayOf(child.dataType, LongType),
+    s"$prettyName requires array<bigint>, got ${child.dataType.sql}")
 
   @transient private lazy val aArr = as.toArray
   @transient private lazy val bArr = bs.toArray

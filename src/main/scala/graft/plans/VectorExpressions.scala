@@ -1,18 +1,33 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, MakeDecimal, UnscaledValue}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+
+/** The argument check of every kernel: success, or the failure message. */
+private[plans] object TypeCheck {
+  def apply(ok: Boolean, failure: => String): TypeCheckResult =
+    if (ok) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(failure)
+
+  /** An array of `elem`, nullable elements or not. */
+  def isArrayOf(t: DataType, elem: DataType): Boolean = t match {
+    case ArrayType(e, _) => e == elem
+    case _               => false
+  }
+}
 
 /** Native codegen dot product over two numeric vectors (array<float> or
   * array<double> on either side) — SURVEY.md §2.K's "codegen Expression"
   * row, justified by profiling: the higher-order `aggregate(zip_with(...))`
   * formulation is interpreted per row (no whole-stage codegen for lambda
   * functions) and dominated the similarity benchmarks (~155 s of a 250 s
-  * sf0.1 run). This expression generates a tight Java loop inside the
-  * WholeStageCodegen stage instead.
+  * sf0.1 run). This expression's generated code calls the companion's
+  * `dot`, a tight loop, inside the WholeStageCodegen stage instead; the
+  * interpreted path calls the same body.
   *
   * Accumulation order is the same sequential left-to-right fold as the HOF
   * formulation and DuckDB's list loops, so §7.2 float parity is preserved.
@@ -23,66 +38,56 @@ case class FloatVecDot(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "vec_dot"
 
-  private def elemType(e: Expression): Option[DataType] = e.dataType match {
-    case ArrayType(FloatType, _)  => Some(FloatType)
-    case ArrayType(DoubleType, _) => Some(DoubleType)
-    case _                        => None
-  }
+  override def checkInputDataTypes(): TypeCheckResult = TypeCheck(
+    FloatVecDot.floatElems(left).isDefined &&
+      FloatVecDot.floatElems(right).isDefined,
+    s"$prettyName requires array<float|double> arguments, got " +
+      s"${left.dataType.sql} and ${right.dataType.sql}")
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    if (elemType(left).isDefined && elemType(right).isDefined)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<float|double> arguments, got " +
-          s"${left.dataType.sql} and ${right.dataType.sql}")
-  }
+  private def isFloat(e: Expression) = FloatVecDot.floatElems(e).get
 
-  private def get(d: ArrayData, t: DataType, i: Int): Double = t match {
-    case FloatType => d.getFloat(i).toDouble
-    case _         => d.getDouble(i)
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val (tx, ty) = (elemType(left).get, elemType(right).get)
-    val n = math.min(x.numElements(), y.numElements())
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      acc += get(x, tx, i) * get(y, ty, i)
-      i += 1
-    }
-    acc
-  }
-
-  private def genGet(v: String, t: DataType, i: String): String = t match {
-    case FloatType => s"(double) $v.getFloat($i)"
-    case _         => s"$v.getDouble($i)"
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    FloatVecDot.dot(a.asInstanceOf[ArrayData], isFloat(left),
+      b.asInstanceOf[ArrayData], isFloat(right))
 
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val (tx, ty) = (elemType(left).get, elemType(right).get)
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += ${genGet(a, tx, i)} * ${genGet(b, ty, i)};
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.FloatVecDot.dot(" +
+      s"$a, ${isFloat(left)}, $b, ${isFloat(right)})")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): FloatVecDot =
     copy(left = newLeft, right = newRight)
+}
+
+/** The one body of `vec_dot` for both evaluation modes: the generated code
+  * calls it as a static method.
+  */
+object FloatVecDot {
+  /** Whether a vector argument is array<float> (vs array<double>); None
+    * for any other type.
+    */
+  def floatElems(e: Expression): Option[Boolean] = e.dataType match {
+    case ArrayType(FloatType, _)  => Some(true)
+    case ArrayType(DoubleType, _) => Some(false)
+    case _                        => None
+  }
+
+  def element(d: ArrayData, isFloat: Boolean, i: Int): Double =
+    if (isFloat) d.getFloat(i).toDouble else d.getDouble(i)
+
+  /** Sequential left-to-right double fold over the common prefix. */
+  def dot(x: ArrayData, xFloat: Boolean, y: ArrayData,
+          yFloat: Boolean): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      acc += element(x, xFloat, i) * element(y, yFloat, i)
+      i += 1
+    }
+    acc
+  }
 }
 
 /** All hyperplane-LSH band keys of one vector in ONE expression node.
@@ -93,7 +98,7 @@ case class FloatVecDot(left: Expression, right: Expression)
   * 20×5 — a fixed driver-side tax that dwarfed the actual scan at bench
   * scale. Here the plane matrix rides along as a codegen reference object
   * (`references[i]`, not generated source), so the generated code is one
-  * small triple loop regardless of band shape.
+  * call of the companion's `bandKeys` regardless of band shape.
   *
   * Key k(b) folds the r projection signs big-endian:
   * bit (rows-1-r) set iff dot(v, plane(b·rows+r)) > 0. Each dot is the same
@@ -107,47 +112,53 @@ case class HyperplaneBandKeys(child: Expression,
                               rows: Int)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
 
-  private def bands: Int = planes.length / rows
-
   override def dataType: DataType =
     ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = false)
   override def prettyName: String = "lsh_band_keys"
 
-  private def elemType: Option[DataType] = child.dataType match {
-    case ArrayType(FloatType, _)  => Some(FloatType)
-    case ArrayType(DoubleType, _) => Some(DoubleType)
-    case _                        => None
-  }
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (elemType.isDefined && planes.nonEmpty && planes.length % rows == 0)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires an array<float|double> input and " +
-          s"planes.length a multiple of rows, got ${child.dataType.sql}")
+  override def checkInputDataTypes(): TypeCheckResult = TypeCheck(
+    FloatVecDot.floatElems(child).isDefined && planes.nonEmpty &&
+      planes.length % rows == 0,
+    s"$prettyName requires an array<float|double> input and " +
+      s"planes.length a multiple of rows, got ${child.dataType.sql}")
 
   /** Java-shaped copy for both eval modes (and the codegen reference). */
   @transient private lazy val planeArr: Array[Array[Double]] =
     planes.map(_.toArray).toArray
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val isFloat = elemType.contains(FloatType)
-    val keys = new Array[Int](bands)
+  private def isFloat = FloatVecDot.floatElems(child).get
+
+  override def nullSafeEval(input: Any): Any =
+    HyperplaneBandKeys.bandKeys(input.asInstanceOf[ArrayData], isFloat,
+      planeArr, rows)
+
+  override protected def doGenCode(ctx: CodegenContext,
+                                   ev: ExprCode): ExprCode = {
+    val p = ctx.addReferenceObj("lshPlanes", planeArr, "double[][]")
+    defineCodeGen(ctx, ev, v =>
+      s"graft.plans.HyperplaneBandKeys.bandKeys($v, $isFloat, $p, $rows)")
+  }
+
+  override protected def withNewChildInternal(
+      newChild: Expression): HyperplaneBandKeys = copy(child = newChild)
+}
+
+object HyperplaneBandKeys {
+  /** The one body of the band keys for both evaluation modes. */
+  def bandKeys(v: ArrayData, isFloat: Boolean,
+               planes: Array[Array[Double]], rows: Int): ArrayData = {
+    val keys = new Array[Int](planes.length / rows)
     var b = 0
-    while (b < bands) {
+    while (b < keys.length) {
       var key = 0
       var r = 0
       while (r < rows) {
-        val pl = planeArr(b * rows + r)
+        val pl = planes(b * rows + r)
         val n = math.min(v.numElements(), pl.length)
         var acc = 0.0
         var i = 0
         while (i < n) {
-          acc += (if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)) *
-            pl(i)
+          acc += FloatVecDot.element(v, isFloat, i) * pl(i)
           i += 1
         }
         if (acc > 0) key += 1 << (rows - 1 - r)
@@ -159,43 +170,6 @@ case class HyperplaneBandKeys(child: Expression,
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
       .fromPrimitiveArray(keys)
   }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val p = ctx.addReferenceObj("lshPlanes", planeArr, "double[][]")
-      val keys = ctx.freshName("keys")
-      val b = ctx.freshName("b")
-      val r = ctx.freshName("r")
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val pl = ctx.freshName("pl")
-      val key = ctx.freshName("key")
-      val get = if (elemType.contains(FloatType))
-        s"(double) $v.getFloat($i)" else s"$v.getDouble($i)"
-      s"""
-         |int[] $keys = new int[$bands];
-         |for (int $b = 0; $b < $bands; $b++) {
-         |  int $key = 0;
-         |  for (int $r = 0; $r < $rows; $r++) {
-         |    double[] $pl = $p[$b * $rows + $r];
-         |    int $n = java.lang.Math.min($v.numElements(), $pl.length);
-         |    double $acc = 0.0;
-         |    for (int $i = 0; $i < $n; $i++) {
-         |      $acc += $get * $pl[$i];
-         |    }
-         |    if ($acc > 0) $key += (1 << ($rows - 1 - $r));
-         |  }
-         |  $keys[$b] = $key;
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions
-         |  .UnsafeArrayData.fromPrimitiveArray($keys);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(
-      newChild: Expression): HyperplaneBandKeys = copy(child = newChild)
 }
 
 /** ∃ j < band: ka[j] == kb[j] — the LSH first-collision filter's
@@ -216,8 +190,7 @@ case class BandPrefixCollides(first: Expression, second: Expression,
     org.apache.spark.sql.types.BooleanType
   override def prettyName: String = "band_prefix_collides"
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+  override def checkInputDataTypes(): TypeCheckResult = {
     // containsNull must be FALSE: the loop reads slots with getInt, which
     // would silently decode a null slot as 0 (a phantom collision on two
     // null slots). The replaced exists(zip_with(...)) spelling propagated
@@ -230,21 +203,32 @@ case class BandPrefixCollides(first: Expression, second: Expression,
       case ArrayType(org.apache.spark.sql.types.IntegerType, n) => !n
       case _ => false
     }
-    if (intArr(first) && intArr(second) &&
-        third.dataType == org.apache.spark.sql.types.IntegerType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<int> containsNull=false ×2, int), " +
-          s"got ${first.dataType.sql}, ${second.dataType.sql}, " +
-          s"${third.dataType.sql}")
+    TypeCheck(intArr(first) && intArr(second) &&
+        third.dataType == org.apache.spark.sql.types.IntegerType,
+      s"$prettyName requires (array<int> containsNull=false ×2, int), " +
+        s"got ${first.dataType.sql}, ${second.dataType.sql}, " +
+        s"${third.dataType.sql}")
   }
 
-  override def nullSafeEval(ka: Any, kb: Any, band: Any): Any = {
-    val x = ka.asInstanceOf[ArrayData]
-    val y = kb.asInstanceOf[ArrayData]
-    val n = math.min(math.min(x.numElements(), y.numElements()),
-      band.asInstanceOf[Int])
+  override def nullSafeEval(ka: Any, kb: Any, band: Any): Any =
+    BandPrefixCollides.collides(ka.asInstanceOf[ArrayData],
+      kb.asInstanceOf[ArrayData], band.asInstanceOf[Int])
+
+  override protected def doGenCode(ctx: CodegenContext,
+                                   ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (ka, kb, band) =>
+      s"graft.plans.BandPrefixCollides.collides($ka, $kb, $band)")
+
+  override protected def withNewChildrenInternal(
+      newFirst: Expression, newSecond: Expression,
+      newThird: Expression): BandPrefixCollides =
+    copy(first = newFirst, second = newSecond, third = newThird)
+}
+
+object BandPrefixCollides {
+  /** The one body of the predicate for both evaluation modes. */
+  def collides(x: ArrayData, y: ArrayData, band: Int): Boolean = {
+    val n = math.min(math.min(x.numElements(), y.numElements()), band)
     var j = 0
     while (j < n) {
       if (x.getInt(j) == y.getInt(j)) return true
@@ -252,29 +236,6 @@ case class BandPrefixCollides(first: Expression, second: Expression,
     }
     false
   }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (ka, kb, band) => {
-      val j = ctx.freshName("j")
-      val n = ctx.freshName("n")
-      s"""
-         |int $n = java.lang.Math.min(
-         |  java.lang.Math.min($ka.numElements(), $kb.numElements()), $band);
-         |${ev.value} = false;
-         |for (int $j = 0; $j < $n; $j++) {
-         |  if ($ka.getInt($j) == $kb.getInt($j)) {
-         |    ${ev.value} = true;
-         |    break;
-         |  }
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): BandPrefixCollides =
-    copy(first = newFirst, second = newSecond, third = newThird)
 }
 
 /** Crossing-number ray cast of one point against a polygon edge list —
@@ -303,25 +264,40 @@ case class RayCrossings(first: Expression, second: Expression,
     org.apache.spark.sql.types.IntegerType
   override def prettyName: String = "ray_crossings"
 
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+  override def checkInputDataTypes(): TypeCheckResult = {
     val ok = first.dataType match {
       case ArrayType(ArrayType(ArrayType(DoubleType, _), _), _) => true
       case _ => false
     }
-    if (ok && second.dataType == DoubleType && third.dataType == DoubleType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<array<array<double>>>, double, " +
-          s"double), got ${first.dataType.sql}, ${second.dataType.sql}, " +
-          s"${third.dataType.sql}")
+    TypeCheck(ok && second.dataType == DoubleType &&
+        third.dataType == DoubleType,
+      s"$prettyName requires (array<array<array<double>>>, double, " +
+        s"double), got ${first.dataType.sql}, ${second.dataType.sql}, " +
+        s"${third.dataType.sql}")
   }
 
-  override def nullSafeEval(es: Any, pxA: Any, pyA: Any): Any = {
-    val edges = es.asInstanceOf[ArrayData]
-    val px = pxA.asInstanceOf[Double]
-    val py = pyA.asInstanceOf[Double]
+  override def nullSafeEval(es: Any, px: Any, py: Any): Any =
+    RayCrossings.crossings(es.asInstanceOf[ArrayData],
+      px.asInstanceOf[Double], py.asInstanceOf[Double])
+
+  override protected def doGenCode(ctx: CodegenContext,
+                                   ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (es, px, py) =>
+      s"graft.plans.RayCrossings.crossings($es, $px, $py)")
+
+  override protected def withNewChildrenInternal(
+      newFirst: Expression, newSecond: Expression,
+      newThird: Expression): RayCrossings =
+    copy(first = newFirst, second = newSecond, third = newThird)
+}
+
+object RayCrossings {
+  /** A non-null point with non-null x and y. */
+  private def isPoint(p: ArrayData): Boolean =
+    p != null && p.numElements() >= 2 && !p.isNullAt(0) && !p.isNullAt(1)
+
+  /** The one body of the ray cast for both evaluation modes. */
+  def crossings(edges: ArrayData, px: Double, py: Double): Int = {
     var acc = 0
     var i = 0
     val n = edges.numElements()
@@ -330,7 +306,7 @@ case class RayCrossings(first: Expression, second: Expression,
       if (e != null && e.numElements() >= 2) {
         val p1 = e.getArray(0)
         val p2 = e.getArray(1)
-        if (RayCrossings.isPoint(p1) && RayCrossings.isPoint(p2)) {
+        if (isPoint(p1) && isPoint(p2)) {
           val x1 = p1.getDouble(0); val y1 = p1.getDouble(1)
           val x2 = p2.getDouble(0); val y2 = p2.getDouble(1)
           if ((y1 > py) != (y2 > py) &&
@@ -341,81 +317,21 @@ case class RayCrossings(first: Expression, second: Expression,
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (es, px, py) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val e = ctx.freshName("e")
-      val p1 = ctx.freshName("p1")
-      val p2 = ctx.freshName("p2")
-      val x1 = ctx.freshName("x1")
-      val y1 = ctx.freshName("y1")
-      val x2 = ctx.freshName("x2")
-      val y2 = ctx.freshName("y2")
-      s"""
-         |int $acc = 0;
-         |int $n = $es.numElements();
-         |for (int $i = 0; $i < $n; $i++) {
-         |  org.apache.spark.sql.catalyst.util.ArrayData $e =
-         |    $es.getArray($i);
-         |  if ($e != null && $e.numElements() >= 2) {
-         |    org.apache.spark.sql.catalyst.util.ArrayData $p1 =
-         |      $e.getArray(0);
-         |    org.apache.spark.sql.catalyst.util.ArrayData $p2 =
-         |      $e.getArray(1);
-         |    if (graft.plans.RayCrossings.isPoint($p1) &&
-         |        graft.plans.RayCrossings.isPoint($p2)) {
-         |      double $x1 = $p1.getDouble(0); double $y1 = $p1.getDouble(1);
-         |      double $x2 = $p2.getDouble(0); double $y2 = $p2.getDouble(1);
-         |      if (($y1 > $py) != ($y2 > $py) &&
-         |          $px < $x1 + ($py - $y1) * ($x2 - $x1) / ($y2 - $y1)) {
-         |        $acc++;
-         |      }
-         |    }
-         |  }
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression,
-      newThird: Expression): RayCrossings =
-    copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-object RayCrossings {
-  /** A non-null point with non-null x and y. */
-  def isPoint(p: ArrayData): Boolean =
-    p != null && p.numElements() >= 2 && !p.isNullAt(0) && !p.isNullAt(1)
 }
 
 object VectorFunctions {
-  /** Make `vec_dot` + `band_prefix_collides` callable from expr()/SQL in
-    * this session. Idempotent.
+  /** The engine's fixed functions as (name, builder), the one table that
+    * both GraftExtensions and `register` read.
     */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", args => FloatVecDot(args(0), args(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "band_prefix_collides",
-      args => BandPrefixCollides(args(0), args(1), args(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_fps", args => WinnowFingerprints(args(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cdc_chunks", args => CdcChunks(args(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_xxh64_set", args => ShingleXxh64Set(args(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_md5p60_set", args => ShingleMd5Set(args(0), 15), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_md5p32_set", args => ShingleMd5Set(args(0), 8), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ray_crossings",
-      args => RayCrossings(args(0), args(1), args(2)), "built-in")
+  val fixed: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "vec_dot" -> (a => FloatVecDot(a(0), a(1))),
+    "band_prefix_collides" -> (a => BandPrefixCollides(a(0), a(1), a(2))),
+    "winnow_fps" -> (a => WinnowFingerprints(a(0))),
+    "cdc_chunks" -> (a => CdcChunks(a(0))),
+    "shingle_xxh64_set" -> (a => ShingleXxh64Set(a(0))),
+    "shingle_md5p60_set" -> (a => ShingleMd5Set(a(0), 15)),
+    "shingle_md5p32_set" -> (a => ShingleMd5Set(a(0), 8)),
+    "ray_crossings" -> (a => RayCrossings(a(0), a(1), a(2))),
     // Decimal(38,12) ⇄ unscaled-long micro-units (r21 verdict #7, the
     // adamic-adar byte trim): both are Spark's own internal expressions
     // (UnscaledValue / MakeDecimal — the machinery behind long-backed
@@ -423,15 +339,17 @@ object VectorFunctions {
     // can ride a shuffle as an 8-byte long and be reconstructed
     // bit-identically (same unscaled value, same scale) on the other
     // side. Exact by construction — no double round-trip anywhere.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "unscaled_dec",
-      args => org.apache.spark.sql.catalyst.expressions
-        .UnscaledValue(args(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "make_dec12",
-      args => org.apache.spark.sql.catalyst.expressions
-        .MakeDecimal(args(0), 38, 12), "built-in")
-  }
+    "unscaled_dec" -> (a => UnscaledValue(a(0))),
+    "make_dec12" -> (a => MakeDecimal(a(0), 38, 12)))
+
+  /** Make the fixed functions callable from expr()/SQL in a session built
+    * without GraftExtensions. Idempotent.
+    */
+  def register(spark: SparkSession): Unit =
+    fixed.foreach { case (name, build) =>
+      spark.sessionState.functionRegistry
+        .createOrReplaceTempFunction(name, build, "built-in")
+    }
 
   /** Register a `minhash_sigs_<k>_<digest>` function with the
     * universal-hash family constants baked in (SQL functions can't take
@@ -469,14 +387,16 @@ object VectorFunctions {
   *
   *   spark.sql.extensions=graft.plans.GraftExtensions
   *
-  * injects the engine's native expressions into every session at build time
-  * (no per-query register() call needed on a cluster).
+  * injects every fixed engine function into each session at build time,
+  * `newSession()` children included, so no query registers anything.
+  * `SparkEntry.localSession` installs it.
   */
 class GraftExtensions
     extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[FloatVecDot].getName, "vec_dot"),
-      (args: Seq[Expression]) => FloatVecDot(args(0), args(1))))
+    VectorFunctions.fixed.foreach { case (name, build) =>
+      ext.injectFunction((
+        new org.apache.spark.sql.catalyst.FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name), build))
+    }
 }

@@ -866,7 +866,6 @@ object SourcesSinks {
   val qGeoPointInPolygon = Q(
     "q_geo_point_in_polygon",
     (s, dir) => {
-      graft.plans.VectorFunctions.register(s)
       def ring(hw: Column, ccw: Boolean) = {
         val corners = Seq((-1, -1), (1, -1), (1, 1), (-1, 1), (-1, -1))
           .map { case (sx, sy) =>

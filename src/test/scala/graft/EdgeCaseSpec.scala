@@ -190,7 +190,6 @@ class EdgeCaseSpec extends AnyFunSuite with SparkFixture {
     // silently decode a null slot as 0 — a phantom collision on two
     // null slots. The expression now requires containsNull = false, so
     // the hazard is an analysis-time error, not a wrong row.
-    graft.plans.VectorFunctions.register(spark)
     val s = spark
     import s.implicits._
     val df = Seq(1).toDF("x")
@@ -212,7 +211,6 @@ class EdgeCaseSpec extends AnyFunSuite with SparkFixture {
 
   test("ray_crossings counts a null edge, point or coordinate as 0 " +
       "crossings, with whole-stage codegen on and off") {
-    graft.plans.VectorFunctions.register(spark)
     // the unit square around (0.5, 0.5) crosses once (the edge x = 1);
     // CAST(id ...) keeps the edge list out of constant folding
     val q = spark.range(1).selectExpr("""ray_crossings(array(
@@ -262,5 +260,46 @@ class EdgeCaseSpec extends AnyFunSuite with SparkFixture {
       .map(b => f"${b & 0xff}%02x").mkString
     assert(chunk.getUTF8String(0).toString == md5)
     assert(chunk.getLong(1) == 2L)
+  }
+
+  test("char kernels size a malformed lead byte as Spark's numChars does " +
+      "instead of reading past the end") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.plans.{CdcChunks, WinnowFingerprints}
+    // a stray continuation byte, and a lead byte past 0xF4: each is one
+    // 1-byte char holding its low 7 bits, as UTF8String.codePointFrom
+    // decodes it (0x80 → U+0000, 0xF8 → U+0078)
+    for ((bytes, same) <- Seq(
+        Array[Byte](0x80.toByte, 0x61) -> "\u0000a",
+        Array[Byte](0xF8.toByte, 0x61, 0x62) -> "xab")) {
+      val s = UTF8String.fromBytes(bytes)
+      assert(s.numChars() == same.length)
+      def winnow(s: UTF8String) = WinnowFingerprints(Literal(s, StringType))
+        .eval().asInstanceOf[ArrayData].toLongArray.toSeq
+      assert(winnow(s) == winnow(UTF8String.fromString(same)))
+      val chunks = CdcChunks(Literal(s, StringType)).eval()
+        .asInstanceOf[ArrayData]
+      assert(chunks.numElements() == 1)
+      val chunk = chunks.getStruct(0, 2)
+      val md5 = java.security.MessageDigest.getInstance("MD5").digest(bytes)
+        .map(b => f"${b & 0xff}%02x").mkString
+      assert(chunk.getUTF8String(0).toString == md5)
+      assert(chunk.getLong(1) == same.length.toLong)
+    }
+  }
+
+  test("a micro-unit long sum past 2^63 raises ARITHMETIC_OVERFLOW, not " +
+      "a wrapped total") {
+    // q_graph_adamic_adar sums unscaled_dec micro-units as a long; the
+    // session's ANSI pin makes an overflow loud
+    val e = intercept[Exception] {
+      spark.range(2).selectExpr(
+        "unscaled_dec(CAST(9000000 AS DECIMAL(38,12))) AS w")
+        .agg(org.apache.spark.sql.functions.sum("w")).collect()
+    }
+    assert(e.getMessage.contains("ARITHMETIC_OVERFLOW"), e.getMessage)
   }
 }

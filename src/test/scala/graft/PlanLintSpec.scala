@@ -372,7 +372,6 @@ class PlanLintSpec extends AnyFunSuite with SparkFixture {
     // parquet split count and the quadratic vec_dot loop serializes. If
     // this goes green the suite-wide invariant above is vacuous.
     import org.apache.spark.sql.functions._
-    graft.plans.VectorFunctions.register(spark)
     val emb = graft.sources.Tables.embeddings(spark, sfDir)
       .withColumn("ns", expr("vec_dot(embedding, embedding)"))
     val a = emb.select(col("vec_id").as("a"), col("embedding").as("va"),

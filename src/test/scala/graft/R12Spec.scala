@@ -102,7 +102,6 @@ class R12Spec extends AnyFunSuite with SparkFixture {
   }
 
   test("graph beam search: recall@3 >= 0.8 vs brute-force truth") {
-    graft.plans.VectorFunctions.register(spark)
     import org.apache.spark.sql.expressions.Window
     val emb = graft.sources.Tables.embeddings(spark, sfDir)
       .withColumn("ns", expr("vec_dot(embedding, embedding)"))

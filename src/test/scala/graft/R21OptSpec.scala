@@ -27,7 +27,6 @@ class R21OptSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("WinnowFingerprints matches the replaced expr() chain as a set") {
-    graft.plans.VectorFunctions.register(spark)
     val h8 = s"struct(${graft.Det.sparkRollAt("cd", "i", 8)} AS h, i AS i)"
     val hsE = s"transform(sequence(1, greatest(size(cd) - 7, 1))," +
       s" i -> $h8)"
@@ -46,7 +45,6 @@ class R21OptSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("CdcChunks matches the replaced expr() chain exactly") {
-    graft.plans.VectorFunctions.register(spark)
     val h8 = graft.Det.sparkRollAt("cd", "i", 8)
     val stsE = "filter(sequence(1, greatest(size(cd) - 7, 1))," +
       s" i -> i = 1 OR pmod($h8, 64) = 0)"
@@ -66,7 +64,6 @@ class R21OptSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("ShingleXxh64Set matches explode+xxhash64+distinct") {
-    graft.plans.VectorFunctions.register(spark)
     val old = operators.Llm.shinglesWithPos(docsPlus)
       .select(col("doc_id"), xxhash64(col("shingle")).as("h")).distinct()
       .groupBy("doc_id").agg(sort_array(collect_list(col("h"))).as("old"))
@@ -80,7 +77,6 @@ class R21OptSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("ShingleMd5Set matches shingleSets+pHash60 sorted multiset") {
-    graft.plans.VectorFunctions.register(spark)
     val old = operators.Llm.shingleSets(docsPlus)
       .withColumn("h", Det.pHash60(col("shingle")))
       .groupBy("doc_id")
@@ -95,7 +91,6 @@ class R21OptSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("ShingleMd5Set p32 variant matches shingleSets+pHash32") {
-    graft.plans.VectorFunctions.register(spark)
     val old = operators.Llm.shingleSets(docsPlus)
       .withColumn("h", Det.pHash32(col("shingle")))
       .groupBy("doc_id")
@@ -110,7 +105,6 @@ class R21OptSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("MinhashSigs matches the min((a*h+b)%p) aggregates") {
-    graft.plans.VectorFunctions.register(spark)
     val p = 4294967311L
     val ab = (0 until 16).map { i =>
       import org.apache.spark.sql.catalyst.expressions.XXH64

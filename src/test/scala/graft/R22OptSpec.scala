@@ -11,7 +11,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class R22OptSpec extends AnyFunSuite with SparkFixture {
 
   test("ray_crossings matches the replaced aggregate() HOF chain") {
-    graft.plans.VectorFunctions.register(spark)
     // the exact expression q_geo_point_in_polygon shipped through r21
     val hof = """aggregate(edges, 0,
          (acc, e) -> acc + (CASE WHEN
@@ -81,7 +80,6 @@ class R22OptSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("unscaled_dec/make_dec12 round-trips the adamic-adar weights") {
-    graft.plans.VectorFunctions.register(spark)
     // every weight the query can produce: 1/ln(deg) for deg 2..100000,
     // cast to DECIMAL(38,12) exactly as the store side does
     val diff = spark.range(2, 100001)
@@ -128,7 +126,6 @@ class R22OptSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("minhash/fingerprint prefilter ⟺ non-empty shingle set") {
-    graft.plans.VectorFunctions.register(spark)
     // size(split(text,' ')) >= 3 must be EXACTLY the rows where the
     // kernel set is non-empty (the ShingleKernel < 3-token contract),
     // including edge docs
