@@ -389,14 +389,59 @@ object VectorFunctions {
   *
   * injects every fixed engine function into each session at build time,
   * `newSession()` children included, so no query registers anything.
-  * `SparkEntry.localSession` installs it.
+  * `SparkEntry.localSession` installs it. The first session built with it
+  * in a JVM also sizes Spark's generated-class cache
+  * (`GraftExtensions.sizedCodegenCache`).
   */
 class GraftExtensions
     extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
+  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
+    GraftExtensions.sizedCodegenCache
     VectorFunctions.fixed.foreach { case (name, build) =>
       ext.injectFunction((
         new org.apache.spark.sql.catalyst.FunctionIdentifier(name),
         new ExpressionInfo(classOf[GraftExtensions].getName, name), build))
     }
+  }
+}
+
+object GraftExtensions {
+  import org.apache.spark.SparkContext
+  import org.apache.spark.metrics.source.CodegenMetrics
+  import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+  import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
+
+  /** Capacity of Spark's generated-class cache in an engine JVM (Spark's
+    * default is 100). A cache key is (classloader, source), so a
+    * whole-stage class compiled on the driver and again in a task takes
+    * two keys; one pass of the benchmark's largest workload touches 161
+    * keys, and more than 100 made every warm pass recompile classes it had
+    * already compiled. Guava splits the capacity evenly across its 4
+    * segments and evicts per segment, so the capacity is several times
+    * the largest working set rather than just above it.
+    */
+  val CodegenCacheEntries = 1000
+
+  /** Once per JVM, before the first engine session compiles anything:
+    * create `CodeGenerator`'s cache with `CodegenCacheEntries`, or with
+    * `spark.sql.codegen.cache.maxEntries` when the SparkContext's conf
+    * sets it. The cache is sized when `CodeGenerator` is first used, so if
+    * code was compiled before this runs the sizing cannot take: that is
+    * logged as a WARN and reads false here.
+    */
+  lazy val sizedCodegenCache: Boolean = {
+    val compiledBefore = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val key = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key
+    val entries = SparkContext.getOrCreate().getConf
+      .get(key, CodegenCacheEntries.toString)
+    val conf = new SQLConf
+    conf.setConfString(key, entries)
+    SQLConf.withExistingConf(conf)(CodeGenerator.compileTime)
+    if (compiledBefore > 0)
+      org.slf4j.LoggerFactory.getLogger(classOf[GraftExtensions]).warn(
+        s"$compiledBefore generated classes were compiled before the first " +
+          s"engine session, so Spark's generated-class cache keeps the size " +
+          s"it was created with ($key, default 100), not $entries")
+    compiledBefore == 0
+  }
 }

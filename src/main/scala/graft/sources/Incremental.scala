@@ -54,21 +54,25 @@ object Incremental {
     * newer than the existing output (or the output does not exist); always
     * return the materialized data read back from `outPath`, plus whether a
     * rebuild happened. The build is by-name — a skipped target never
-    * constructs its plan.
+    * constructs its plan. A target this call built is read back with the
+    * schema it was written with, so reopening it runs no footer-inference
+    * job; a skipped target's schema is inferred from its files.
     */
   def materialize(spark: SparkSession, inputs: Seq[String], outPath: String)
                  (build: => DataFrame): (DataFrame, Boolean) = {
-    val rebuilt = withBuildLock(outPath) {
+    val builtSchema = withBuildLock(outPath) {
       // double-checked inside the lock: the loser of a build race must
       // see the winner's fresh output, not rebuild (or worse, overwrite
       // files the winner is still writing)
-      if (isFresh(spark, inputs, outPath)) false
-      else {
-        BuildTimer.timed { build.write.mode("overwrite").parquet(outPath) }
-        true
+      if (isFresh(spark, inputs, outPath)) None
+      else BuildTimer.timed {
+        val built = build
+        built.write.mode("overwrite").parquet(outPath)
+        Some(built.schema)
       }
     }
-    (spark.read.parquet(outPath), rebuilt)
+    val reader = builtSchema.fold(spark.read)(s => spark.read.schema(s))
+    (reader.parquet(outPath), builtSchema.isDefined)
   }
 
   /** Serialize store BUILDS per artifact key within this JVM. Two

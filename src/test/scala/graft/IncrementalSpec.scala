@@ -50,6 +50,46 @@ class IncrementalSpec extends AnyFunSuite with SparkFixture {
     assert(b3 && builds == 2 && df3.count() == 5)
   }
 
+  /** `f`'s result and the number of Spark jobs it ran. */
+  private def withJobCount[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"inc_jobs_${System.nanoTime}"
+    sc.setJobGroup(group, group)
+    try {
+      val r = f
+      org.apache.spark.graftbridge.ListenerDrain.drain(sc)
+      (r, sc.statusTracker.getJobIdsForGroup(group).length)
+    } finally sc.clearJobGroup()
+  }
+
+  test("a rebuilt target reads back with its written schema and no " +
+      "inference job; a skipped one infers the same schema with one job") {
+    val in = Paths.get(tmpDir("inc_rb_in"), "region")
+    copyTree(Paths.get(sfDir, "region.parquet"), in)
+    val out = tmpDir("inc_rb_out") + "/agg"
+    def build() = spark.read.parquet(in.toString)
+      .groupBy("r_regionkey")
+      .agg(count(lit(1)).as("n"), collect_list("r_name").as("names"))
+    assert(!build().schema("n").nullable)
+
+    val ((rebuilt, b1), rebuildJobs) = withJobCount(
+      Incremental.materialize(spark, Seq(in.toString), out)(build()))
+    val (_, writeJobs) = withJobCount(
+      build().write.parquet(tmpDir("inc_rb_plain") + "/agg"))
+    val ((skipped, b2), skipJobs) = withJobCount(
+      Incremental.materialize(spark, Seq(in.toString), out)(build()))
+    assert(b1 && !b2)
+    // file sources read every column as nullable, given schema or not
+    assert(rebuilt.schema == skipped.schema)
+    assert(rebuilt.schema.forall(_.nullable))
+    assert(rebuilt.schema.fieldNames.toSeq == Seq("r_regionkey", "n", "names"))
+    val rows = rebuilt.orderBy("r_regionkey").collect().toSeq
+    assert(rows.size == 5)
+    assert(rows == skipped.orderBy("r_regionkey").collect().toSeq)
+    assert(rebuildJobs == writeJobs, "the rebuilt read-back ran a job")
+    assert(skipJobs == 1, "the skipped read-back infers its schema in a job")
+  }
+
   test("isFresh is false when the output was never written") {
     assert(!Incremental.isFresh(spark, Seq(sfDir), tmpDir("inc_x") + "/none"))
   }

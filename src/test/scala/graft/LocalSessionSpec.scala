@@ -34,4 +34,22 @@ class LocalSessionSpec extends AnyFunSuite with SparkFixture {
       .getDouble(0) == 6.0)
     assert(child.conf.get("spark.sql.ansi.enabled") == "true")
   }
+
+  test("the generated-class cache holds 150 distinct projections: a " +
+      "second round compiles nothing") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val session = spark // built first: building it sizes the cache
+    assert(graft.plans.GraftExtensions.sizedCodegenCache,
+      "code was compiled before the first session, so the cache kept " +
+        "Spark's default size")
+    // each literal is inlined, so every projection is a distinct class
+    def round(): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      (1 to 150).foreach(i =>
+        session.range(8).selectExpr(s"id * $i + 7919").collect())
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    assert(round() >= 150)
+    assert(round() == 0)
+  }
 }
