@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.sources.Tables
 
 /** One named engine capability: the Spark implementation plus (for
   * SQL-expressible ops) the DuckDB oracle the driver hash-compares against.
@@ -55,6 +56,68 @@ object Det {
   def sqlAvg12(e: String): String =
     s"CAST(SUM(CAST(CAST(($e) AS DOUBLE) AS DECIMAL(38,12))) AS DOUBLE)" +
       s" / CAST(COUNT($e) AS DOUBLE)"
+
+  /** Exact integer carrier for cent sums and their products. */
+  val Dec0: DecimalType = DecimalType(38, 0)
+
+  /** Money to exact integer cents, nearest-int as floor(x·100 + 0.5):
+    * pure IEEE in both engines, where the engines' round() diverges at
+    * ties. `x` is interpolated as is, so it must bind at least as tightly
+    * as `*` (a column, a call, a product or a parenthesized expression).
+    * One SQL text for both sides: Spark parses it via `cents`, the oracle
+    * interpolates `sqlCents`.
+    *
+    * Out of BIGINT range the rule raises in both engines. Spark's
+    * floor(DOUBLE) is already a BIGINT that saturates (1e20 gives
+    * Long.MaxValue, NaN gives 0), and its DOUBLE→BIGINT cast lets 2^63
+    * through as Long.MaxValue, so floor(v) gets a guard term that is 0
+    * for -2^63 ≤ v < 2^63 and otherwise (NaN too) a cast to INT, which
+    * overflows in both engines and names the offending value. The guard
+    * is added, not wrapped around floor(v), so that Spark still infers
+    * `x IS NOT NULL` from a filter on the cents.
+    */
+  def sqlCents(x: String): String = {
+    val v = s"$x * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)"
+    val lim = "CAST(9223372036854775807 AS DOUBLE)" // 2^63 once rounded
+    s"CAST(floor($v) + CASE WHEN $v >= -$lim AND $v < $lim THEN 0 " +
+      s"ELSE CAST($v AS INT) END AS BIGINT)"
+  }
+  def cents(x: String): Column = expr(sqlCents(x))
+
+  /** Money to integer cents via the engines' round(x·100). Not
+    * interchangeable with `sqlCents`: the float addition in x·100 + 0.5
+    * can round up to the next integer where round(x·100) does not, so a
+    * query keeps whichever rule its oracle was written with.
+    */
+  def sqlRoundCents(x: String): String = s"CAST(round($x * 100) AS BIGINT)"
+  def roundCents(x: String): Column = expr(sqlRoundCents(x))
+
+  /** The daily revenue series: lineitem grouped by return flag (AS
+    * `flag`, when `byFlag`) and ship day (AS `d`), with the day's sum of
+    * l_extendedprice in cents by `rule` AS `v` — BIGINT, or DECIMAL(38,0)
+    * per row and in the sum when `dec0`. `more` are further aggregates
+    * of the same groups. `sqlDailyCents` is the oracle's CTE body for the
+    * series by flag, HUGEINT standing in for DECIMAL(38,0).
+    */
+  def dailyCents(spark: SparkSession, dir: String, v: String,
+                 byFlag: Boolean = true, dec0: Boolean = false,
+                 rule: String => String = sqlCents,
+                 more: Seq[Column] = Nil): DataFrame = {
+    val keys = (if (byFlag) Seq(col("l_returnflag").as("flag")) else Nil) :+
+      to_date(col("l_shipdate")).as("d")
+    val c = expr(rule("l_extendedprice"))
+    val total = if (dec0) sum(c.cast(Dec0)).cast(Dec0) else sum(c)
+    Tables.lineitem(spark, dir).groupBy(keys: _*).agg(total.as(v), more: _*)
+  }
+  def sqlDailyCents(v: String, dec0: Boolean = false,
+                    rule: String => String = sqlCents,
+                    more: Seq[String] = Nil): String = {
+    val carrier = if (dec0) "HUGEINT" else "BIGINT"
+    val aggs = (s"CAST(SUM(${rule("l_extendedprice")}) AS $carrier) AS $v" +:
+      more).mkString(", ")
+    s"SELECT l_returnflag AS flag, CAST(l_shipdate AS DATE) AS d, $aggs " +
+      "FROM lineitem GROUP BY 1, 2"
+  }
 
   /** Portable 60-bit hash — the cross-engine determinism workhorse.
     *

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType}
 import graft.{Det, Q}
+import graft.Det.{Dec0, Dec12}
 import graft.sources.Tables
 
 /** Aggregations — SURVEY.md §2.D.
@@ -139,21 +140,18 @@ object Aggregates {
     (s, dir) =>
       Tables.lineitem(s, dir)
         .select(expr("CAST(l_quantity AS BIGINT) DIV 10").as("qty_bin"),
-          expr("CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE) " +
-            "+ CAST(0.5 AS DOUBLE)) AS BIGINT) DIV 1000000").as("price_bin"),
-          expr("CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE) " +
-            "+ CAST(0.5 AS DOUBLE)) AS BIGINT)").as("c"))
+          expr(s"${Det.sqlCents("l_extendedprice")} DIV 1000000")
+            .as("price_bin"),
+          Det.cents("l_extendedprice").as("c"))
         .groupBy("qty_bin", "price_bin")
         .agg(count(lit(1)).as("n"), sum(col("c")).as("sum_cents"))
         .orderBy("qty_bin", "price_bin"),
-    Some("""SELECT CAST(l_quantity AS BIGINT) // 10 AS qty_bin,
-                   CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE)
-                     + CAST(0.5 AS DOUBLE)) AS BIGINT) // 1000000
+    Some(s"""SELECT CAST(l_quantity AS BIGINT) // 10 AS qty_bin,
+                   ${Det.sqlCents("l_extendedprice")} // 1000000
                      AS price_bin,
                    count(*) AS n,
-                   CAST(SUM(CAST(floor(l_extendedprice
-                     * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE))
-                     AS BIGINT)) AS BIGINT) AS sum_cents
+                   CAST(SUM(${Det.sqlCents("l_extendedprice")}) AS BIGINT)
+                     AS sum_cents
             FROM lineitem
             GROUP BY 1, 2 ORDER BY qty_bin, price_bin"""))
 
@@ -307,13 +305,10 @@ object Aggregates {
   val qAggMeanVariants = Q(
     "q_agg_mean_variants",
     (s, dir) => {
-      val Dec12 = org.apache.spark.sql.types.DecimalType(38, 12)
-      val Dec0 = org.apache.spark.sql.types.DecimalType(38, 0)
       Tables.lineitem(s, dir)
         .select(col("l_returnflag").as("flag"),
           col("l_extendedprice").as("v"),
-          expr("CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE) " +
-            "+ CAST(0.5 AS DOUBLE)) AS BIGINT)").as("c"))
+          Det.cents("l_extendedprice").as("c"))
         .groupBy("flag")
         .agg(count(lit(1)).as("n"),
           Det.davg(col("v")).as("mean_arith"),
@@ -334,8 +329,7 @@ object Aggregates {
         .orderBy("flag")
     },
     Some(s"""WITH b AS (SELECT l_returnflag AS flag, l_extendedprice AS v,
-                    CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE)
-                      + CAST(0.5 AS DOUBLE)) AS BIGINT) AS c
+                    ${Det.sqlCents("l_extendedprice")} AS c
                   FROM lineitem),
              m AS (SELECT flag, count(*) AS n,
                     ${Det.sqlAvg("v")} AS mean_arith,
@@ -635,10 +629,10 @@ object Aggregates {
           (col("bin").cast(DoubleType) * 10000.0).as("lo"),
           ((col("bin") + 1).cast(DoubleType) * 10000.0).as("hi"))
         .orderBy("bin"),
-    Some("""SELECT bin, count(*) AS n,
+    Some(s"""SELECT bin, count(*) AS n,
                    CAST(bin AS DOUBLE) * 10000.0 AS lo,
                    CAST(bin + 1 AS DOUBLE) * 10000.0 AS hi
-            FROM (SELECT CAST(round(l_extendedprice * 100) AS BIGINT)
+            FROM (SELECT ${Det.sqlRoundCents("l_extendedprice")}
                            // 1000000 AS bin
                   FROM lineitem)
             GROUP BY bin ORDER BY bin"""))
@@ -818,13 +812,13 @@ object Aggregates {
           (col("sum_cents").cast(DoubleType) /
             col("n_orders").cast(DoubleType) / 100.0).as("avg_price"))
         .orderBy("o_orderpriority"),
-    Some("""SELECT o_orderpriority, count(*) AS n_orders,
+    Some(s"""SELECT o_orderpriority, count(*) AS n_orders,
                    CAST(sum(cents) AS BIGINT) AS sum_cents,
                    min(cents) AS min_cents, max(cents) AS max_cents,
                    CAST(sum(cents) AS DOUBLE) / CAST(count(*) AS DOUBLE)
                      / 100.0 AS avg_price
             FROM (SELECT o_orderpriority,
-                         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+                         ${Det.sqlRoundCents("o_totalprice")} AS cents
                   FROM orders)
             GROUP BY o_orderpriority ORDER BY o_orderpriority"""))
 
@@ -894,12 +888,12 @@ object Aggregates {
           col("top.l_orderkey").as("at_orderkey"),
           col("top.l_partkey").as("at_partkey"))
         .orderBy("l_returnflag"),
-    Some("""SELECT l_returnflag,
+    Some(s"""SELECT l_returnflag,
                    (top).cents AS max_cents,
                    (top).l_orderkey AS at_orderkey,
                    (top).l_partkey AS at_partkey
             FROM (SELECT l_returnflag,
-                         max(ROW(CAST(round(l_extendedprice * 100) AS BIGINT),
+                         max(ROW(${Det.sqlRoundCents("l_extendedprice")},
                                  l_orderkey, l_partkey)
                              ::STRUCT(cents BIGINT, l_orderkey BIGINT,
                                       l_partkey BIGINT)) AS top
@@ -925,11 +919,11 @@ object Aggregates {
           sum(round(col("o_totalprice") * 100).cast(DecimalType(18, 0))
             .cast(org.apache.spark.sql.types.LongType)).as("sum_cents"))
         .orderBy("m"),
-    Some("""SELECT date_trunc('month', o_orderdate) AS m,
+    Some(s"""SELECT date_trunc('month', o_orderdate) AS m,
                    count(DISTINCT o_custkey) AS n_custs,
                    count(DISTINCT o_orderpriority) AS n_prios,
                    count(*) AS n_orders,
-                   CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
+                   CAST(sum(${Det.sqlRoundCents("o_totalprice")})
                      AS BIGINT) AS sum_cents
             FROM orders GROUP BY m ORDER BY m"""))
 
@@ -1020,8 +1014,8 @@ object Aggregates {
           expr("percentile(abs(c - med), 0.5)").as("mad_cents"))
         .orderBy("l_returnflag")
     },
-    Some("""WITH c AS (SELECT l_returnflag,
-                   CAST(round(l_extendedprice * 100) AS BIGINT) AS c
+    Some(s"""WITH c AS (SELECT l_returnflag,
+                   ${Det.sqlRoundCents("l_extendedprice")} AS c
                  FROM lineitem),
             m AS (SELECT l_returnflag, quantile_cont(c, 0.5) AS med
                   FROM c GROUP BY l_returnflag)
@@ -1055,7 +1049,7 @@ object Aggregates {
           col("olast.c").as("close_cents"),
           col("high_cents"), col("low_cents"))
         .orderBy("user_id", "day"),
-    Some("""SELECT user_id, CAST(CAST(ts_day AS DATE) AS VARCHAR) AS day,
+    Some(s"""SELECT user_id, CAST(CAST(ts_day AS DATE) AS VARCHAR) AS day,
                    count(*) AS n_trades,
                    (min(ROW(ts, event_id, c)
                       ::STRUCT(ts TIMESTAMP, event_id BIGINT, c BIGINT))).c
@@ -1065,7 +1059,7 @@ object Aggregates {
                      AS close_cents,
                    max(c) AS high_cents, min(c) AS low_cents
             FROM (SELECT user_id, CAST(ts AS DATE) AS ts_day, ts, event_id,
-                         CAST(round(value * 100) AS BIGINT) AS c
+                         ${Det.sqlRoundCents("value")} AS c
                   FROM events WHERE event_type = 'purchase')
             GROUP BY user_id, ts_day ORDER BY user_id, day"""))
 
@@ -1129,7 +1123,7 @@ object Aggregates {
         ("o_custkey", "o_custkey"),
         ("o_orderstatus", "o_orderstatus"),
         ("o_orderpriority", "o_orderpriority"),
-        ("price_cents", "CAST(round(o_totalprice * 100) AS BIGINT)"),
+        ("price_cents", Det.sqlRoundCents("o_totalprice")),
         ("order_day", "CAST(o_orderdate AS DATE)"))
       cols.map { case (n, e) =>
         s"""SELECT '$n' AS col_name, count(*) AS n_total,
@@ -1178,9 +1172,9 @@ object Aggregates {
         .orderBy("o_orderpriority")
     },
     Some(s"""WITH ranked AS (SELECT o_orderpriority,
-                    CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
+                    ${Det.sqlRoundCents("o_totalprice")} AS cents,
                     CAST(row_number() OVER (PARTITION BY o_orderpriority
-                      ORDER BY CAST(round(o_totalprice * 100) AS BIGINT),
+                      ORDER BY ${Det.sqlRoundCents("o_totalprice")},
                                o_orderkey) AS BIGINT) AS r
                   FROM orders),
              sums AS (SELECT o_orderpriority, count(*) AS n,
@@ -1487,13 +1481,10 @@ object Aggregates {
   val qAggRegression = Q(
     "q_agg_regression",
     (s, dir) => {
-      val Dec0 = DecimalType(38, 0)
       val li = Tables.lineitem(s, dir)
         .select(col("l_partkey"),
           col("l_quantity").cast("long").as("x"),
-          expr(
-            "CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE) " +
-              "+ CAST(0.5 AS DOUBLE)) AS BIGINT)").as("y"))
+          Det.cents("l_extendedprice").as("y"))
       li.join(broadcast(Tables.part(s, dir)
           .select(col("p_partkey"), col("p_brand"))),
           col("l_partkey") === col("p_partkey"))
@@ -1521,8 +1512,7 @@ object Aggregates {
                 CAST(SUM(CAST(x * x AS DECIMAL(38,0))) AS DOUBLE) AS sxx,
                 CAST(SUM(CAST(y * y AS DECIMAL(38,0))) AS DOUBLE) AS syy
               FROM (SELECT l_partkey, CAST(l_quantity AS BIGINT) AS x,
-                      CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE)
-                        + CAST(0.5 AS DOUBLE)) AS BIGINT) AS y
+                      ${Det.sqlCents("l_extendedprice")} AS y
                     FROM lineitem) li
               JOIN part ON l_partkey = p_partkey
               GROUP BY p_brand),
@@ -1557,9 +1547,7 @@ object Aggregates {
           col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_mktsegment").as("segment"),
           col("c_nationkey").as("firm"))
-        .agg(sum(expr(
-          "CAST(floor(o_totalprice * CAST(100.0 AS DOUBLE) " +
-            "+ CAST(0.5 AS DOUBLE)) AS BIGINT)").cast(Dec18))
+        .agg(sum(Det.cents("o_totalprice").cast(Dec18))
           .cast(Dec18).as("rev"))
       firm.groupBy("segment")
         .agg(count(lit(1)).as("n_firms"),
@@ -1571,10 +1559,9 @@ object Aggregates {
             .as("hhi"))
         .orderBy("segment")
     },
-    Some("""WITH firm AS (
+    Some(s"""WITH firm AS (
               SELECT c_mktsegment AS segment, c_nationkey AS firm,
-                CAST(SUM(CAST(floor(o_totalprice
-                  * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT))
+                CAST(SUM(${Det.sqlCents("o_totalprice")})
                   AS HUGEINT) AS rev
               FROM orders JOIN customer ON o_custkey = c_custkey
               GROUP BY 1, 2)
@@ -1606,8 +1593,7 @@ object Aggregates {
     (s, dir) => {
       val base = Tables.orders(s, dir)
         .select(col("o_orderpriority").as("pri"),
-          expr("CAST(floor(o_totalprice * CAST(100.0 AS DOUBLE) " +
-            "+ CAST(0.5 AS DOUBLE)) AS BIGINT)").as("v"),
+          Det.cents("o_totalprice").as("v"),
           col("o_orderkey"))
         .localCheckpoint()
       val counts = base.groupBy("pri").agg(count(lit(1)).as("n"))
@@ -1632,9 +1618,8 @@ object Aggregates {
             lit(1))).as("n_high"))
         .orderBy("pri")
     },
-    Some("""WITH v AS (SELECT o_orderpriority AS pri,
-                    CAST(floor(o_totalprice * CAST(100.0 AS DOUBLE)
-                      + CAST(0.5 AS DOUBLE)) AS BIGINT) AS v, o_orderkey
+    Some(s"""WITH v AS (SELECT o_orderpriority AS pri,
+                    ${Det.sqlCents("o_totalprice")} AS v, o_orderkey
                   FROM orders),
              r AS (SELECT *,
                      row_number() OVER (PARTITION BY pri
@@ -1671,8 +1656,7 @@ object Aggregates {
       import org.apache.spark.sql.expressions.Window
       val per = Tables.orders(s, dir)
         .groupBy("o_custkey")
-        .agg(sum(expr("CAST(floor(o_totalprice * CAST(100.0 AS DOUBLE) " +
-          "+ CAST(0.5 AS DOUBLE)) AS BIGINT)")).as("rev_c"))
+        .agg(sum(Det.cents("o_totalprice")).as("rev_c"))
       val tot = per.agg(sum(col("rev_c")).as("tot_c"))
       val wRun = Window.orderBy(col("rev_c").desc, col("o_custkey"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1688,10 +1672,9 @@ object Aggregates {
             .as("cum_share"))
         .orderBy("rk")
     },
-    Some("""WITH per AS (SELECT o_custkey,
-                    CAST(sum(CAST(floor(o_totalprice
-                      * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE))
-                      AS BIGINT)) AS BIGINT) AS rev_c
+    Some(s"""WITH per AS (SELECT o_custkey,
+                    CAST(sum(${Det.sqlCents("o_totalprice")}) AS BIGINT)
+                      AS rev_c
                   FROM orders GROUP BY o_custkey),
              tot AS (SELECT CAST(sum(rev_c) AS BIGINT) AS tot_c FROM per),
              top AS (SELECT * FROM per
@@ -1730,8 +1713,7 @@ object Aggregates {
       val B = 32
       val rows = Tables.orders(s, dir)
         .select(col("o_orderkey").as("k"),
-          expr("CAST(floor(o_totalprice * CAST(100.0 AS DOUBLE) " +
-            "+ CAST(0.5 AS DOUBLE)) AS BIGINT)").as("c"))
+          Det.cents("o_totalprice").as("c"))
       val means = rows
         .select(col("k"), col("c"),
           explode(sequence(lit(0), lit(B - 1))).as("b"))
@@ -1755,9 +1737,8 @@ object Aggregates {
       point.crossJoin(broadcast(means))
         .select("n", "mean", "ci_lo", "ci_hi")
     },
-    Some("""WITH rows_ AS (SELECT o_orderkey AS k,
-                    CAST(floor(o_totalprice * CAST(100.0 AS DOUBLE)
-                      + CAST(0.5 AS DOUBLE)) AS BIGINT) AS c
+    Some(s"""WITH rows_ AS (SELECT o_orderkey AS k,
+                    ${Det.sqlCents("o_totalprice")} AS c
                   FROM orders),
              fan AS (SELECT k, c, CAST(t.b AS INT) AS b
                      FROM rows_, unnest(range(0, 32)) AS t(b)),
@@ -1805,8 +1786,7 @@ object Aggregates {
         .where(col("c_mktsegment").isin("BUILDING", "MACHINERY"))
         .select(col("o_orderkey").as("k"),
           (col("c_mktsegment") === "BUILDING").as("g"),
-          expr("CAST(floor(o_totalprice * CAST(100.0 AS DOUBLE) " +
-            "+ CAST(0.5 AS DOUBLE)) AS BIGINT)").as("c"))
+          Det.cents("o_totalprice").as("c"))
       val dFml = "CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE) " +
         "- CAST(s0 AS DOUBLE) / CAST(n0 AS DOUBLE)"
       val obs = rows.agg(
@@ -1838,10 +1818,9 @@ object Aggregates {
           count(lit(1)).as("n_resamples"))
         .select("n1", "n0", "diff_obs", "n_extreme", "n_resamples")
     },
-    Some("""WITH rows_ AS (SELECT o_orderkey AS k,
+    Some(s"""WITH rows_ AS (SELECT o_orderkey AS k,
                     c_mktsegment = 'BUILDING' AS g,
-                    CAST(floor(o_totalprice * CAST(100.0 AS DOUBLE)
-                      + CAST(0.5 AS DOUBLE)) AS BIGINT) AS c
+                    ${Det.sqlCents("o_totalprice")} AS c
                   FROM orders JOIN customer ON o_custkey = c_custkey
                   WHERE c_mktsegment IN ('BUILDING', 'MACHINERY')),
              obs AS (SELECT

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType}
 import graft.{Det, Q}
+import graft.Det.{Dec0, Dec12}
 import graft.sources.Tables
 
 /** Round-11 analytics additions — SURVEY.md §2.S.
@@ -16,10 +17,6 @@ import graft.sources.Tables
   * group-key shuffles, bounded fan-outs).
   */
 object Analytics {
-
-  private val cents =
-    "CAST(floor(o_totalprice * CAST(100.0 AS DOUBLE) " +
-      "+ CAST(0.5 AS DOUBLE)) AS BIGINT)"
 
   /** Interval-overlap self-join — the scheduling-conflict detector
     * (double-booked resources, overlapping service windows): each order
@@ -186,9 +183,7 @@ object Analytics {
           col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("l_returnflag").as("flag"),
           to_date(col("o_orderdate")).as("d"))
-        .agg(sum(expr(
-          "CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE) " +
-            "+ CAST(0.5 AS DOUBLE)) AS BIGINT)")).as("x"))
+        .agg(sum(Det.cents("l_extendedprice")).as("x"))
       val a = daily.select(col("flag"), col("d").as("di"), col("x").as("xi"))
       val b = daily.select(col("flag"), col("d").as("dj"), col("x").as("xj"))
       // broadcast the a-side: the daily rollup is CALENDAR-BOUNDED (the
@@ -210,9 +205,7 @@ object Analytics {
     },
     Some(s"""WITH daily AS (SELECT l_returnflag AS flag,
                     CAST(o_orderdate AS DATE) AS d,
-                    CAST(sum(CAST(floor(l_extendedprice
-                      * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE))
-                      AS BIGINT)) AS BIGINT) AS x
+                    CAST(sum(${Det.sqlCents("l_extendedprice")}) AS BIGINT) AS x
                   FROM lineitem JOIN orders ON l_orderkey = o_orderkey
                   GROUP BY 1, 2),
              p AS (SELECT a.flag,
@@ -251,24 +244,22 @@ object Analytics {
       val qz = s"(($phi) * ((((((((1.330274429 * ($tt)) - 1.821255978) " +
         s"* ($tt)) + 1.781477937) * ($tt)) - 0.356563782) * ($tt)) " +
         s"+ 0.319381530) * ($tt))"
-      val cents = "CAST(floor(c_acctbal * CAST(100.0 AS DOUBLE) " +
-        "+ CAST(0.5 AS DOUBLE)) AS BIGINT)"
       val c = Tables.customer(s, dir)
         .select(col("c_nationkey").as("nation"),
-          expr(cents).as("c"))
+          Det.cents("c_acctbal").as("c"))
       val per = c.groupBy("nation")
         .agg(count(lit(1)).as("n"),
-          sum(col("c").cast(org.apache.spark.sql.types.DecimalType(38, 0)))
+          sum(col("c").cast(Dec0))
             .as("sc"))
       // m = the OBSERVED hypothesis count (ADVICE r12): the literal 25
       // silently ran BH against the wrong (larger) family when a small
       // scale factor covers fewer nations — conservative but mismatched
       // with the actual number of tests in both engines.
       val glob = c.agg(count(lit(1)).as("ng"),
-        sum(col("c").cast(org.apache.spark.sql.types.DecimalType(38, 0)))
+        sum(col("c").cast(Dec0))
           .as("scg"),
         sum((col("c") * col("c"))
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("sqg"),
+          .cast(Dec0)).as("sqg"),
         countDistinct(col("nation")).as("m"))
       val zp = per.crossJoin(broadcast(glob))
         .withColumn("z", expr(
@@ -301,8 +292,7 @@ object Analytics {
         s"* ($tt)) + 1.781477937) * ($tt)) - 0.356563782) * ($tt)) " +
         s"+ 0.319381530) * ($tt))"
       s"""WITH c AS (SELECT c_nationkey AS nation,
-                    CAST(floor(c_acctbal * CAST(100.0 AS DOUBLE)
-                      + CAST(0.5 AS DOUBLE)) AS BIGINT) AS c
+                    ${Det.sqlCents("c_acctbal")} AS c
                   FROM customer),
              per AS (SELECT nation, count(*) AS n,
                     SUM(CAST(c AS DECIMAL(38,0))) AS sc
@@ -464,12 +454,7 @@ object Analytics {
   val qAggTheilSen = Q(
     "q_agg_theil_sen",
     (s, dir) => {
-      val daily = Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag").as("flag"),
-          to_date(col("l_shipdate")).as("d"))
-        .agg(sum(expr(
-          "CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE) " +
-            "+ CAST(0.5 AS DOUBLE)) AS BIGINT)")).as("y"))
+      val daily = Det.dailyCents(s, dir, "y")
         .withColumn("x",
           datediff(col("d"), lit("1970-01-01").cast("date")).cast("long"))
         // r21: calendar-bounded (days × flags) but consumed three times
@@ -497,11 +482,10 @@ object Analytics {
           col("intercept_med"))
         .orderBy("flag")
     },
-    Some("""WITH daily AS (SELECT l_returnflag AS flag,
+    Some(s"""WITH daily AS (SELECT l_returnflag AS flag,
                     CAST(l_shipdate AS DATE) AS d,
-                    CAST(sum(CAST(floor(l_extendedprice
-                      * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE))
-                      AS BIGINT)) AS BIGINT) AS y,
+                    CAST(sum(${Det.sqlCents("l_extendedprice")}) AS BIGINT)
+                      AS y,
                     CAST(datediff('day', DATE '1970-01-01',
                       CAST(l_shipdate AS DATE)) AS BIGINT) AS x
                   FROM lineitem GROUP BY 1, 2, 4),
@@ -540,7 +524,8 @@ object Analytics {
     (s, dir) => {
       val per = Tables.orders(s, dir)
         .groupBy("o_custkey")
-        .agg(count(lit(1)).as("freq"), sum(expr(cents)).as("money_c"))
+        .agg(count(lit(1)).as("freq"),
+          sum(Det.cents("o_totalprice")).as("money_c"))
         .join(Tables.customer(s, dir)
           .select(col("c_custkey"), col("c_mktsegment").as("segment")),
           col("o_custkey") === col("c_custkey"))
@@ -565,7 +550,8 @@ object Analytics {
     },
     Some(s"""WITH per AS (SELECT o_custkey,
                     count(*) AS freq,
-                    CAST(sum($cents) AS BIGINT) AS money_c
+                    CAST(sum(${Det.sqlCents("o_totalprice")}) AS BIGINT)
+                      AS money_c
                   FROM orders GROUP BY o_custkey),
              pts AS (SELECT c.c_mktsegment AS segment, money_c, freq,
                        min(o_custkey) AS keeper, count(*) AS n_dups
@@ -720,7 +706,7 @@ object Analytics {
     "q_agg_benford",
     (s, dir) => {
       val d = Tables.orders(s, dir)
-        .select(substring(expr(cents).cast("string"), 1, 1)
+        .select(substring(Det.cents("o_totalprice").cast("string"), 1, 1)
           .cast(IntegerType).as("digit"))
         .groupBy("digit").agg(count(lit(1)).as("n"))
       val tot = d.agg(sum(col("n")).as("n_total"))
@@ -731,8 +717,8 @@ object Analytics {
         .withColumn("abs_dev", abs(col("share") - col("expected")))
         .orderBy("digit")
     },
-    Some(s"""WITH d AS (SELECT CAST(substr(CAST($cents AS VARCHAR), 1, 1)
-                      AS INTEGER) AS digit
+    Some(s"""WITH d AS (SELECT CAST(substr(CAST(${Det.sqlCents("o_totalprice")}
+                      AS VARCHAR), 1, 1) AS INTEGER) AS digit
                   FROM orders),
              c AS (SELECT digit, count(*) AS n FROM d GROUP BY digit),
              t AS (SELECT CAST(sum(n) AS BIGINT) AS n_total FROM c)
@@ -848,12 +834,10 @@ object Analytics {
   val qChecksumTable = Q(
     "q_checksum_table",
     (s, dir) => {
-      val Dec0 = org.apache.spark.sql.types.DecimalType(38, 0)
       val repr =
         "concat_ws('|', CAST(l_orderkey AS STRING), " +
           "CAST(l_linenumber AS STRING), l_returnflag, l_linestatus, " +
-          "CAST(CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE) " +
-          "+ CAST(0.5 AS DOUBLE)) AS BIGINT) AS STRING), " +
+          s"CAST(${Det.sqlCents("l_extendedprice")} AS STRING), " +
           "CAST(CAST(l_shipdate AS DATE) AS STRING))"
       Tables.lineitem(s, dir)
         .select(Det.pHash60(expr(repr)).as("h"))
@@ -871,8 +855,7 @@ object Analytics {
              FROM (SELECT ${Det.sqlPHash60(
       "CAST(l_orderkey AS VARCHAR) || '|' || " +
         "CAST(l_linenumber AS VARCHAR) || '|' || l_returnflag || '|' || " +
-        "l_linestatus || '|' || CAST(CAST(floor(l_extendedprice " +
-        "* CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT) " +
+        s"l_linestatus || '|' || CAST(${Det.sqlCents("l_extendedprice")} " +
         "AS VARCHAR) || '|' || CAST(CAST(l_shipdate AS DATE) AS VARCHAR)"
     )} AS h FROM lineitem)"""))
 
@@ -982,12 +965,10 @@ object Analytics {
   val qAggCovarMatrix = Q(
     "q_agg_covar_matrix",
     (s, dir) => {
-      val Dec0 = org.apache.spark.sql.types.DecimalType(38, 0)
       def dsum(e: String) = sum(expr(e).cast(Dec0))
       Tables.lineitem(s, dir)
         .select(col("l_quantity").cast("long").as("x"),
-          expr("CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE) " +
-            "+ CAST(0.5 AS DOUBLE)) AS BIGINT)").as("y"),
+          Det.cents("l_extendedprice").as("y"),
           expr("CAST(floor(l_discount * CAST(1000.0 AS DOUBLE) " +
             "+ CAST(0.5 AS DOUBLE)) AS BIGINT)").as("z"))
         .agg(count(lit(1)).as("n"),
@@ -1004,8 +985,7 @@ object Analytics {
           expr(covFml("syz", "sy", "sz")).as("cov_price_disc"))
     },
     Some(s"""WITH b AS (SELECT CAST(l_quantity AS BIGINT) AS x,
-                    CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE)
-                      + CAST(0.5 AS DOUBLE)) AS BIGINT) AS y,
+                    ${Det.sqlCents("l_extendedprice")} AS y,
                     CAST(floor(l_discount * CAST(1000.0 AS DOUBLE)
                       + CAST(0.5 AS DOUBLE)) AS BIGINT) AS z
                   FROM lineitem),
@@ -1045,7 +1025,6 @@ object Analytics {
   val qAnomalyEsd = Q(
     "q_anomaly_esd",
     (s, dir) => {
-      val Dec0 = org.apache.spark.sql.types.DecimalType(38, 0)
       // SAMPLE σ (n−1 denominator, ADVICE r12): the canonical R_i
       // statistic the λ_i critical-value tables are defined against —
       // var_s = (n·ss − sy²)/(n·(n−1)); the population form inflated z
@@ -1054,10 +1033,7 @@ object Analytics {
         "/ CAST(n AS DOUBLE)) / sqrt((CAST(n AS DOUBLE) " +
         "* CAST(ss AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))" +
         " / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0D)))"
-      val daily = Tables.lineitem(s, dir)
-        .groupBy(to_date(col("l_shipdate")).as("d"))
-        .agg(sum(expr("CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE)" +
-          " + CAST(0.5 AS DOUBLE)) AS BIGINT)")).as("y"))
+      val daily = Det.dailyCents(s, dir, "y", byFlag = false)
         .withColumn("t",
           datediff(col("d"), lit("1970-01-01").cast("date")).cast("long"))
         // r21: calendar-bounded; the 3-round ESD driver loop executes
@@ -1114,9 +1090,8 @@ object Analytics {
                    WHERE p.t NOT IN (SELECT t FROM pk$r))"""
       }.mkString(",\n             ")
       s"""WITH daily AS (SELECT CAST(l_shipdate AS DATE) AS d,
-                    CAST(SUM(CAST(floor(l_extendedprice
-                      * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE))
-                      AS BIGINT)) AS BIGINT) AS y,
+                    CAST(SUM(${Det.sqlCents("l_extendedprice")}) AS BIGINT)
+                      AS y,
                     CAST(datediff('day', DATE '1970-01-01',
                       CAST(l_shipdate AS DATE)) AS BIGINT) AS t
                   FROM lineitem GROUP BY 1, 3),
@@ -1144,7 +1119,6 @@ object Analytics {
   val qDqDriftPsi = Q(
     "q_dq_drift_psi",
     (s, dir) => {
-      val Dec12 = org.apache.spark.sql.types.DecimalType(38, 12)
       val priced = Tables.orders(s, dir)
         .select(col("o_totalprice").as("v"), col("o_orderdate").as("ts"))
       val mid = priced.agg(
@@ -1315,8 +1289,7 @@ object Analytics {
     (s, dir) => {
       val spend = Tables.orders(s, dir)
         .groupBy(col("o_custkey"))
-        .agg(sum(expr("CAST(floor(o_totalprice * CAST(100.0 AS DOUBLE)" +
-          " + CAST(0.5 AS DOUBLE)) AS BIGINT)")).as("c"))
+        .agg(sum(Det.cents("o_totalprice")).as("c"))
       val ranked = Prefix.globalRank(
         Prefix.withRangeBucket(spend, col("c"), 64, "__b"),
         "__b", Seq(col("c"), col("o_custkey")), bucketDesc = false, "rk")
@@ -1339,9 +1312,8 @@ object Analytics {
             .as("cum_share"))
         .orderBy("decile")
     },
-    Some("""WITH spend AS (SELECT o_custkey,
-                    CAST(SUM(CAST(floor(o_totalprice * CAST(100.0
-                      AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT))
+    Some(s"""WITH spend AS (SELECT o_custkey,
+                    CAST(SUM(${Det.sqlCents("o_totalprice")})
                       AS BIGINT) AS c
                   FROM orders GROUP BY o_custkey),
              rkd AS (SELECT c, CAST(row_number() OVER (
@@ -1533,11 +1505,7 @@ object Analytics {
           "sqrt((2.0 * n1 * n2 * (2.0 * n1 * n2 - n1 - n2)) / " +
           "((n1 + n2) * (n1 + n2) * (n1 + n2 - 1.0))) END"
       val w = Window.partitionBy("flag").orderBy("d")
-      val daily = Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag").as("flag"),
-          to_date(col("l_shipdate")).as("d"))
-        .agg(sum(expr("CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE)" +
-          " + CAST(0.5 AS DOUBLE)) AS BIGINT)")).as("y"))
+      val daily = Det.dailyCents(s, dir, "y")
       val fences = daily.groupBy("flag")
         .agg(round(expr("percentile(y, 0.5)"), 6).as("med"))
       daily.join(broadcast(fences), "flag")
@@ -1565,12 +1533,7 @@ object Analytics {
            (CAST(r AS DOUBLE) - (2.0 * n1 * n2 / (n1 + n2) + 1.0)) /
            sqrt((2.0 * n1 * n2 * (2.0 * n1 * n2 - n1 - n2)) /
            ((n1 + n2) * (n1 + n2) * (n1 + n2 - 1.0))) END"""
-      s"""WITH daily AS (SELECT l_returnflag AS flag,
-                    CAST(l_shipdate AS DATE) AS d,
-                    CAST(SUM(CAST(floor(l_extendedprice
-                      * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE))
-                      AS BIGINT)) AS BIGINT) AS y
-                  FROM lineitem GROUP BY 1, 2),
+      s"""WITH daily AS (${Det.sqlDailyCents("y")}),
              fences AS (SELECT flag,
                     round(quantile_cont(y, 0.5), 6) AS med
                   FROM daily GROUP BY flag),
@@ -1627,12 +1590,10 @@ object Analytics {
   val qAggPcaPower = Q(
     "q_agg_pca_power",
     (s, dir) => {
-      val Dec0 = org.apache.spark.sql.types.DecimalType(38, 0)
       def dsum(e: String) = sum(expr(e).cast(Dec0))
       val moments = Tables.lineitem(s, dir)
         .select(col("l_quantity").cast("long").as("x"),
-          expr("CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE) " +
-            "+ CAST(0.5 AS DOUBLE)) AS BIGINT)").as("y"),
+          Det.cents("l_extendedprice").as("y"),
           expr("CAST(floor(l_discount * CAST(1000.0 AS DOUBLE) " +
             "+ CAST(0.5 AS DOUBLE)) AS BIGINT)").as("z"))
         .agg(count(lit(1)).as("n"),
@@ -1682,8 +1643,7 @@ object Analytics {
                            FROM $prev)))"""
       }.mkString(",\n             ")
       s"""WITH b AS (SELECT CAST(l_quantity AS BIGINT) AS x,
-                    CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE)
-                      + CAST(0.5 AS DOUBLE)) AS BIGINT) AS y,
+                    ${Det.sqlCents("l_extendedprice")} AS y,
                     CAST(floor(l_discount * CAST(1000.0 AS DOUBLE)
                       + CAST(0.5 AS DOUBLE)) AS BIGINT) AS z
                   FROM lineitem),
@@ -1732,7 +1692,7 @@ object Analytics {
       val daily = Tables.orders(s, dir)
         .groupBy(col("o_orderpriority").as("flag"),
           to_date(col("o_orderdate")).as("d"))
-        .agg(sum(expr(cents)).as("v"))
+        .agg(sum(Det.cents("o_totalprice")).as("v"))
       val w = Window.partitionBy(col("flag")).orderBy(col("d"))
         .rowsBetween(-3, 3)
       daily
@@ -1749,7 +1709,7 @@ object Analytics {
     },
     Some(s"""WITH daily AS (SELECT o_orderpriority AS flag,
                     CAST(o_orderdate AS DATE) AS d,
-                    CAST(sum($cents) AS BIGINT) AS v
+                    CAST(sum(${Det.sqlCents("o_totalprice")}) AS BIGINT) AS v
                   FROM orders GROUP BY 1, 2),
              f AS (SELECT flag, d, v,
                      list_sort(list(v) OVER (PARTITION BY flag ORDER BY d
@@ -1782,7 +1742,7 @@ object Analytics {
       val rec =
         "concat(lpad(CAST(o_orderkey AS STRING), 12, '0'), " +
           "rpad(o_orderstatus, 1, ' '), " +
-          s"lpad(CAST($cents AS STRING), 14, '0'), " +
+          s"lpad(CAST(${Det.sqlCents("o_totalprice")} AS STRING), 14, '0'), " +
           "CAST(CAST(o_orderdate AS DATE) AS STRING))"
       val path = graft.sources.SourcesSinks
         .dirKeyedTempPath(s, dir, "fixed_width_orders")
@@ -1803,7 +1763,8 @@ object Analytics {
     },
     Some(s"""WITH r AS (SELECT lpad(CAST(o_orderkey AS VARCHAR), 12, '0')
                     || rpad(o_orderstatus, 1, ' ')
-                    || lpad(CAST($cents AS VARCHAR), 14, '0')
+                    || lpad(CAST(${Det.sqlCents("o_totalprice")} AS VARCHAR),
+                      14, '0')
                     || CAST(CAST(o_orderdate AS DATE) AS VARCHAR) AS v
                   FROM orders),
              p AS (SELECT CAST(substr(v, 1, 12) AS BIGINT) AS okey,
@@ -1981,11 +1942,7 @@ object Analytics {
     (s, dir) => {
       val win = Window.partitionBy("flag").orderBy("d")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val daily = Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag").as("flag"),
-          to_date(col("l_shipdate")).as("d"))
-        .agg(sum(expr("CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE)" +
-          " + CAST(0.5 AS DOUBLE)) AS BIGINT)")).as("v"))
+      val daily = Det.dailyCents(s, dir, "v")
       val pref = daily
         .withColumn("sk", sum(col("v")).over(win))
         .withColumn("k", row_number().over(
@@ -2009,12 +1966,7 @@ object Analytics {
             "(CAST(n_days AS DOUBLE) * CAST(sn AS DOUBLE))").as("stat"))
         .orderBy("flag")
     },
-    Some("""WITH daily AS (SELECT l_returnflag AS flag,
-                    CAST(l_shipdate AS DATE) AS d,
-                    CAST(SUM(CAST(floor(l_extendedprice
-                      * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE))
-                      AS BIGINT)) AS BIGINT) AS v
-                  FROM lineitem GROUP BY 1, 2),
+    Some(s"""WITH daily AS (${Det.sqlDailyCents("v")}),
              pref AS (SELECT flag, d, v,
                  CAST(sum(v) OVER (PARTITION BY flag ORDER BY d
                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
@@ -2057,11 +2009,7 @@ object Analytics {
     "q_seasonal_dow",
     (s, dir) => {
       val frame = Window.partitionBy("flag").orderBy("d").rowsBetween(-3, 3)
-      val daily = Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag").as("flag"),
-          to_date(col("l_shipdate")).as("d"))
-        .agg(sum(expr("CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE)" +
-          " + CAST(0.5 AS DOUBLE)) AS BIGINT)")).as("v"))
+      val daily = Det.dailyCents(s, dir, "v")
       daily
         .withColumn("s7", sum(col("v")).over(frame))
         .withColumn("n7", count(lit(1)).over(frame))
@@ -2075,12 +2023,7 @@ object Analytics {
         .select("flag", "dow", "n_days", "resid7", "seasonal")
         .orderBy("flag", "dow")
     },
-    Some("""WITH daily AS (SELECT l_returnflag AS flag,
-                    CAST(l_shipdate AS DATE) AS d,
-                    CAST(SUM(CAST(floor(l_extendedprice
-                      * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE))
-                      AS BIGINT)) AS BIGINT) AS v
-                  FROM lineitem GROUP BY 1, 2),
+    Some(s"""WITH daily AS (${Det.sqlDailyCents("v")}),
              f AS (SELECT flag, d, v,
                  CAST(sum(v) OVER w AS BIGINT) AS s7,
                  count(*) OVER w AS n7
@@ -2111,17 +2054,15 @@ object Analytics {
   val qAggTtest = Q(
     "q_agg_ttest",
     (s, dir) => {
-      val Dec0 = org.apache.spark.sql.types.DecimalType(38, 0)
-      val cents = "CAST(floor(o_totalprice * CAST(100.0 AS DOUBLE)" +
-        " + CAST(0.5 AS DOUBLE)) AS BIGINT)"
       val m = Tables.orders(s, dir)
         .join(Tables.customer(s, dir),
           col("o_custkey") === col("c_custkey"))
         .where(col("c_mktsegment").isin("BUILDING", "MACHINERY"))
         .groupBy(col("c_mktsegment").as("seg"))
         .agg(count(lit(1)).as("n"),
-          sum(expr(cents).cast(Dec0)).cast(Dec0).as("sx"),
-          sum((expr(cents).cast(Dec0) * expr(cents).cast(Dec0)))
+          sum(Det.cents("o_totalprice").cast(Dec0)).cast(Dec0).as("sx"),
+          sum((Det.cents("o_totalprice").cast(Dec0) *
+            Det.cents("o_totalprice").cast(Dec0)))
             .cast(Dec0).as("sxx"))
         .withColumn("nn", expr("CAST(n AS DOUBLE)"))
         .withColumn("mean", expr("CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)"))
@@ -2144,9 +2085,8 @@ object Analytics {
             "- CAST(1 AS DOUBLE))) + v2 * v2 / (nn2 * nn2 * (nn2 " +
             "- CAST(1 AS DOUBLE))))").as("df"))
     },
-    Some("""WITH j AS (SELECT c_mktsegment AS seg,
-                    CAST(floor(o_totalprice * CAST(100.0 AS DOUBLE)
-                      + CAST(0.5 AS DOUBLE)) AS BIGINT) AS c
+    Some(s"""WITH j AS (SELECT c_mktsegment AS seg,
+                    ${Det.sqlCents("o_totalprice")} AS c
                   FROM orders JOIN customer ON o_custkey = c_custkey
                   WHERE c_mktsegment IN ('BUILDING', 'MACHINERY')),
              m AS (SELECT seg, count(*) AS n,
@@ -2278,7 +2218,6 @@ object Analytics {
   val qAggMutualInfo = Q(
     "q_agg_mutual_info",
     (s, dir) => {
-      val Dec12 = org.apache.spark.sql.types.DecimalType(38, 12)
       val base = Tables.customer(s, dir)
         .select(col("c_nationkey").as("x"), col("c_mktsegment").as("y"))
       val cells = base.groupBy("x", "y").agg(count(lit(1)).as("o"))
@@ -2351,8 +2290,7 @@ object Analytics {
     (s, dir) => {
       val daily = Tables.events(s, dir)
         .groupBy(to_date(col("ts")).as("d"))
-        .agg(sum(expr("CAST(floor(value * CAST(100.0 AS DOUBLE)" +
-          " + CAST(0.5 AS DOUBLE)) AS BIGINT)")).as("y"))
+        .agg(sum(Det.cents("value")).as("y"))
         .select(datediff(col("d"), lit("1970-01-01").cast("date"))
           .cast("long").as("t"), col("y"))
       val g = daily.agg(min(col("t")).as("tmin"), max(col("t")).as("tmax"))
@@ -2374,11 +2312,10 @@ object Analytics {
           count(lit(1)).as("n_points"))
         .orderBy("b")
     },
-    Some("""WITH daily AS (SELECT
+    Some(s"""WITH daily AS (SELECT
                     CAST(datediff('day', DATE '1970-01-01',
                       CAST(ts AS DATE)) AS BIGINT) AS t,
-                    CAST(SUM(CAST(floor(value * CAST(100.0 AS DOUBLE)
-                      + CAST(0.5 AS DOUBLE)) AS BIGINT)) AS BIGINT) AS y
+                    CAST(SUM(${Det.sqlCents("value")}) AS BIGINT) AS y
                   FROM events GROUP BY 1),
              g AS (SELECT min(t) AS tmin, max(t) AS tmax FROM daily),
              bk AS (SELECT t, y,
@@ -2426,8 +2363,7 @@ object Analytics {
     (s, dir) => {
       val daily = Tables.events(s, dir)
         .groupBy(to_date(col("ts")).as("d"))
-        .agg(sum(expr("CAST(floor(value * CAST(100.0 AS DOUBLE)" +
-          " + CAST(0.5 AS DOUBLE)) AS BIGINT)")).as("y"))
+        .agg(sum(Det.cents("value")).as("y"))
         .select(datediff(col("d"), lit("1970-01-01").cast("date"))
           .cast("long").as("t"), col("y"))
       val g = daily.agg(min(col("t")).as("tmin"), max(col("t")).as("tmax"),
@@ -2466,11 +2402,10 @@ object Analytics {
           lit(null).cast("double").as("area"))
       endpoints.union(picks).orderBy("t_day")
     },
-    Some("""WITH daily AS (SELECT
+    Some(s"""WITH daily AS (SELECT
                     CAST(datediff('day', DATE '1970-01-01',
                       CAST(ts AS DATE)) AS BIGINT) AS t,
-                    CAST(SUM(CAST(floor(value * CAST(100.0 AS DOUBLE)
-                      + CAST(0.5 AS DOUBLE)) AS BIGINT)) AS BIGINT) AS y
+                    CAST(SUM(${Det.sqlCents("value")}) AS BIGINT) AS y
                   FROM events GROUP BY 1),
              g AS (SELECT min(t) AS tmin, max(t) AS tmax,
                      min_by(y, t) AS y0, max_by(y, t) AS yn FROM daily),
@@ -2534,11 +2469,7 @@ object Analytics {
     "q_time_decompose",
     (s, dir) => {
       val frame = Window.partitionBy("flag").orderBy("d").rowsBetween(-3, 3)
-      val daily = Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag").as("flag"),
-          to_date(col("l_shipdate")).as("d"))
-        .agg(sum(expr("CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE)" +
-          " + CAST(0.5 AS DOUBLE)) AS BIGINT)")).as("v"))
+      val daily = Det.dailyCents(s, dir, "v")
         .withColumn("s7", sum(col("v")).over(frame))
         .withColumn("n7", count(lit(1)).over(frame))
         // Frame-span check (ADVICE r13): 7 ROWS spans 7 observations,
@@ -2567,12 +2498,8 @@ object Analytics {
             "/ CAST(7 AS DOUBLE) - seasonal").as("resid"))
         .orderBy("flag", "d")
     },
-    Some("""WITH daily AS (
-              SELECT l_returnflag AS flag, CAST(l_shipdate AS DATE) AS d,
-                CAST(SUM(CAST(floor(l_extendedprice
-                  * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT))
-                  AS BIGINT) AS v
-              FROM lineitem GROUP BY 1, 2),
+    Some(s"""WITH daily AS (
+              ${Det.sqlDailyCents("v")}),
              fr AS (SELECT flag, d, v,
                       CAST(sum(v) OVER w AS BIGINT) AS s7,
                       count(*) OVER w AS n7,
@@ -2713,7 +2640,6 @@ object Analytics {
   val qTimeSax = Q(
     "q_time_sax",
     (s, dir) => {
-      val Dec0 = org.apache.spark.sql.types.DecimalType(38, 0)
       val w = Window.partitionBy("flag").orderBy("d")
       val varFml = "(CAST(n AS DOUBLE) * CAST(svv AS DOUBLE) " +
         "- CAST(sv AS DOUBLE) * CAST(sv AS DOUBLE))"
@@ -2727,12 +2653,7 @@ object Analytics {
       // q_time_crosscorr posture.
       val zFml = s"CASE WHEN $varFml <= CAST(0.0 AS DOUBLE) " +
         s"THEN NULL ELSE $zCore END"
-      val daily = Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag").as("flag"),
-          to_date(col("l_shipdate")).as("d"))
-        .agg(sum(expr("CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE)" +
-          " + CAST(0.5 AS DOUBLE)) AS BIGINT)").cast(Dec0))
-          .cast(Dec0).as("v"))
+      val daily = Det.dailyCents(s, dir, "v", dec0 = true)
         .withColumn("rn", row_number().over(w))
       val st = daily.groupBy("flag")
         .agg(count(lit(1)).as("n"), sum(col("v")).cast(Dec0).as("sv"),
@@ -2762,11 +2683,7 @@ object Analytics {
       val zFml = s"""CASE WHEN $varFml <= CAST(0.0 AS DOUBLE)
           THEN NULL ELSE $zCore END"""
       s"""WITH daily AS (
-              SELECT l_returnflag AS flag, CAST(l_shipdate AS DATE) AS d,
-                CAST(SUM(CAST(floor(l_extendedprice
-                  * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT))
-                  AS HUGEINT) AS v
-              FROM lineitem GROUP BY 1, 2),
+              ${Det.sqlDailyCents("v", dec0 = true)}),
              rk AS (SELECT flag, v,
                       row_number() OVER (PARTITION BY flag ORDER BY d)
                         AS rn
@@ -2814,8 +2731,7 @@ object Analytics {
         expr("CASE WHEN l_returnflag = 'R' THEN CAST(1 AS BIGINT) " +
           "ELSE CAST(-1 AS BIGINT) END").as("y"),
         expr("CAST(l_quantity AS BIGINT)").as("x1"),
-        expr("CAST(floor(l_discount * CAST(100.0 AS DOUBLE) " +
-          "+ CAST(0.5 AS DOUBLE)) AS BIGINT)").as("x2"))
+        Det.cents("l_discount").as("x2"))
       var w = s.range(1).select(lit(0L).as("w0"), lit(0L).as("w1"),
         lit(0L).as("w2"))
       for (_ <- 1 to 3) {
@@ -2841,12 +2757,11 @@ object Analytics {
           expr("CAST(n_errors AS DOUBLE) / CAST(n_rows AS DOUBLE)")
             .as("error_rate"))
     },
-    Some("""WITH x AS (SELECT
+    Some(s"""WITH x AS (SELECT
                    CASE WHEN l_returnflag = 'R' THEN CAST(1 AS BIGINT)
                         ELSE CAST(-1 AS BIGINT) END AS y,
                    CAST(l_quantity AS BIGINT) AS x1,
-                   CAST(floor(l_discount * CAST(100.0 AS DOUBLE)
-                     + CAST(0.5 AS DOUBLE)) AS BIGINT) AS x2
+                   ${Det.sqlCents("l_discount")} AS x2
                  FROM lineitem),
              w1 AS (SELECT
                    CAST(COALESCE(sum(y), 0) AS BIGINT) AS w0,
@@ -2915,11 +2830,7 @@ object Analytics {
       // probability at ~1e-6 per value.
       val arg = "CAST(2.0 AS DOUBLE) * pi() * CAST(t % p AS DOUBLE) " +
         "/ CAST(p AS DOUBLE)"
-      val daily = Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag").as("flag"),
-          to_date(col("l_shipdate")).as("d"))
-        .agg(sum(expr("CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE)" +
-          " + CAST(0.5 AS DOUBLE)) AS BIGINT)")).as("v"))
+      val daily = Det.dailyCents(s, dir, "v")
         .withColumn("t", row_number().over(wRk) - 1)
       val periods = s.range(2, 15).select(col("id").cast("int").as("p"))
       daily.crossJoin(broadcast(periods))
@@ -2946,12 +2857,8 @@ object Analytics {
             .otherwise(0L))
         .orderBy("flag", "p")
     },
-    Some("""WITH daily AS (
-              SELECT l_returnflag AS flag, CAST(l_shipdate AS DATE) AS d,
-                CAST(SUM(CAST(floor(l_extendedprice
-                  * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT))
-                  AS BIGINT) AS v
-              FROM lineitem GROUP BY 1, 2),
+    Some(s"""WITH daily AS (
+              ${Det.sqlDailyCents("v")}),
              rk AS (SELECT flag, v,
                       row_number() OVER (PARTITION BY flag ORDER BY d) - 1
                         AS t
@@ -2992,7 +2899,6 @@ object Analytics {
   val qFeatureScale = Q(
     "q_feature_scale",
     (s, dir) => {
-      val Dec0 = org.apache.spark.sql.types.DecimalType(38, 0)
       val varFml = "(CAST(n AS DOUBLE) * CAST(svv AS DOUBLE) " +
         "- CAST(sv AS DOUBLE) * CAST(sv AS DOUBLE))"
       val zFml = s"CASE WHEN $varFml <= CAST(0.0 AS DOUBLE) THEN NULL " +
@@ -3003,8 +2909,7 @@ object Analytics {
         "/ (CAST(mx AS DOUBLE) - CAST(mn AS DOUBLE)) END"
       val c = Tables.customer(s, dir)
         .select(col("c_custkey"), col("c_nationkey").as("nat"),
-          expr("CAST(floor(c_acctbal * CAST(100.0 AS DOUBLE) " +
-            "+ CAST(0.5 AS DOUBLE)) AS BIGINT)").as("x"))
+          Det.cents("c_acctbal").as("x"))
       val st = c.groupBy("nat")
         .agg(count(lit(1)).as("n"),
           sum(col("x").cast(Dec0)).cast(Dec0).as("sv"),
@@ -3015,9 +2920,8 @@ object Analytics {
           expr(zFml).as("z"), expr(mmFml).as("mm"))
         .orderBy("c_custkey")
     },
-    Some("""WITH c AS (SELECT c_custkey, c_nationkey AS nat,
-                    CAST(floor(c_acctbal * CAST(100.0 AS DOUBLE)
-                      + CAST(0.5 AS DOUBLE)) AS BIGINT) AS x
+    Some(s"""WITH c AS (SELECT c_custkey, c_nationkey AS nat,
+                    ${Det.sqlCents("c_acctbal")} AS x
                   FROM customer),
              st AS (SELECT nat, count(*) AS n,
                       CAST(sum(x) AS HUGEINT) AS sv,
@@ -3066,11 +2970,7 @@ object Analytics {
     "q_time_dtw",
     (s, dir) => {
       val wRk = Window.partitionBy("flag").orderBy("d")
-      val daily = Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag").as("flag"),
-          to_date(col("l_shipdate")).as("d"))
-        .agg(sum(expr("CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE)" +
-          " + CAST(0.5 AS DOUBLE)) AS BIGINT)")).as("v"))
+      val daily = Det.dailyCents(s, dir, "v")
         .withColumn("rn", row_number().over(wRk))
       val n = daily.groupBy("flag").agg(count(lit(1)).as("n_days"))
       val ser = daily.join(broadcast(n), Seq("flag"))
@@ -3110,11 +3010,7 @@ object Analytics {
       // the prefix-min reformulation -- all exact BIGINT list math
       val cost = "([abs(xs[t] - ys[j + 1]) FOR t IN range(1, len(xs) + 1)])"
       s"""WITH RECURSIVE daily AS (
-              SELECT l_returnflag AS flag, CAST(l_shipdate AS DATE) AS d,
-                CAST(SUM(CAST(floor(l_extendedprice
-                  * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT))
-                  AS BIGINT) AS v
-              FROM lineitem GROUP BY 1, 2),
+              ${Det.sqlDailyCents("v")}),
              rk AS (SELECT flag, v,
                       row_number() OVER (PARTITION BY flag ORDER BY d)
                         AS rn,
@@ -3432,7 +3328,6 @@ object Analytics {
   val qSeqEntropyRate = Q(
     "q_seq_entropy_rate",
     (s, dir) => {
-      val Dec12 = org.apache.spark.sql.types.DecimalType(38, 12)
       val wNext = Window.partitionBy("user_id").orderBy("ts", "event_id")
       val trans = Tables.events(s, dir)
         .select(col("user_id"), col("ts"), col("event_id"),
@@ -4008,8 +3903,7 @@ object Analytics {
       val maxima = Tables.lineitem(s, dir)
         .groupBy(col("l_returnflag").as("flag"),
           to_date(col("l_shipdate")).as("d"))
-        .agg(expr("CAST(SUM(CAST(floor(l_extendedprice" +
-          " * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT))" +
+        .agg(expr(s"CAST(SUM(${Det.sqlCents("l_extendedprice")})" +
           " DIV 100 AS BIGINT)").as("v"))
         .groupBy(col("flag"), trunc(col("d"), "month").as("m"))
         .agg(max(col("v")).as("mx"))
@@ -4042,10 +3936,9 @@ object Analytics {
             .as("return_level_12"))
         .orderBy("flag")
     },
-    Some("""WITH daily AS (
+    Some(s"""WITH daily AS (
               SELECT l_returnflag AS flag, CAST(l_shipdate AS DATE) AS d,
-                CAST(SUM(CAST(floor(l_extendedprice
-                  * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT))
+                CAST(SUM(${Det.sqlCents("l_extendedprice")})
                   // 100 AS BIGINT) AS v
               FROM lineitem GROUP BY 1, 2),
              mx AS (SELECT flag, date_trunc('month', d) AS m,
@@ -4153,12 +4046,11 @@ object Analytics {
   val qAggVarMerge = Q(
     "q_agg_var_merge",
     (s, dir) => {
-      val cents = "CAST(round(c_acctbal * 100) AS BIGINT)"
       val shards = Tables.customer(s, dir)
         .join(broadcast(Tables.nation(s, dir)),
           col("c_nationkey") === col("n_nationkey"))
         .select(col("n_regionkey").as("rk"), col("n_nationkey").as("nk"),
-          expr(cents).as("x"))
+          Det.roundCents("c_acctbal").as("x"))
         .groupBy("rk", "nk")
         .agg(count(lit(1)).as("n"), sum(col("x")).as("s"),
           sum(expr("CAST(x AS DECIMAL(38,0)) * CAST(x AS DECIMAL(38,0))"))
@@ -4176,8 +4068,8 @@ object Analytics {
             " / CAST(n AS DOUBLE) END").as("var_pop"))
         .orderBy("region")
     },
-    Some("""WITH j AS (SELECT r_name AS region, n_nationkey AS nk,
-                    CAST(round(c_acctbal * 100) AS BIGINT) AS x
+    Some(s"""WITH j AS (SELECT r_name AS region, n_nationkey AS nk,
+                    ${Det.sqlRoundCents("c_acctbal")} AS x
                   FROM customer
                   JOIN nation ON c_nationkey = n_nationkey
                   JOIN region ON n_regionkey = r_regionkey)
@@ -4331,9 +4223,7 @@ object Analytics {
   val qSketchHistQuantiles = Q(
     "q_sketch_hist_quantiles",
     (s, dir) => {
-      val cents = "CAST(floor(o_totalprice * CAST(100.0 AS DOUBLE)" +
-        " + CAST(0.5 AS DOUBLE)) AS BIGINT)"
-      val o = Tables.orders(s, dir).select(expr(cents).as("v"))
+      val o = Tables.orders(s, dir).select(Det.cents("o_totalprice").as("v"))
       val rng = o.agg(min(col("v")).as("lo"), max(col("v")).as("hi"),
         count(lit(1)).as("n"))
       val hist = o.crossJoin(broadcast(rng))
@@ -4362,9 +4252,8 @@ object Analytics {
             " / CAST(c AS DOUBLE))").as("q_est"))
         .orderBy("p")
     },
-    Some("""WITH o AS (SELECT CAST(floor(o_totalprice
-                    * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE))
-                    AS BIGINT) AS v FROM orders),
+    Some(s"""WITH o AS (SELECT ${Det.sqlCents("o_totalprice")} AS v
+                  FROM orders),
              rng AS (SELECT CAST(min(v) AS BIGINT) AS lo,
                        CAST(max(v) AS BIGINT) AS hi,
                        CAST(count(*) AS BIGINT) AS n FROM o),
@@ -4415,8 +4304,7 @@ object Analytics {
       val daily = Tables.lineitem(s, dir)
         .groupBy(col("l_returnflag").as("flag"),
           to_date(col("l_shipdate")).as("d"))
-        .agg(expr("CAST(SUM(CAST(floor(l_extendedprice" +
-          " * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT))" +
+        .agg(expr(s"CAST(SUM(${Det.sqlCents("l_extendedprice")})" +
           " DIV 100 AS BIGINT)").as("v"))
         .withColumn("k", count(lit(1)).over(wRun))
         .withColumn("s", sum(col("v")).over(wRun))
@@ -4456,10 +4344,9 @@ object Analytics {
         .withColumn("gain", expr("sse0 - sse_split"))
         .orderBy("flag")
     },
-    Some("""WITH daily AS (
+    Some(s"""WITH daily AS (
               SELECT l_returnflag AS flag, CAST(l_shipdate AS DATE) AS d,
-                CAST(SUM(CAST(floor(l_extendedprice
-                  * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT))
+                CAST(SUM(${Det.sqlCents("l_extendedprice")})
                   // 100 AS BIGINT) AS v
               FROM lineitem GROUP BY 1, 2),
              pre AS (SELECT flag, d, v,
@@ -4681,7 +4568,7 @@ object Analytics {
     (s, dir) => {
       Tables.lineitem(s, dir)
         .select(col("l_returnflag").as("flag"),
-          round(col("l_extendedprice") * 100).cast("long").as("x"),
+          Det.roundCents("l_extendedprice").as("x"),
           col("l_quantity").cast("long").as("y"))
         .groupBy("flag")
         .agg(count(lit(1)).as("n"),
@@ -4718,19 +4605,19 @@ object Analytics {
           expr("ratio + 1.96 * se").as("ci_hi"))
         .orderBy("flag")
     },
-    Some("""WITH m AS (SELECT l_returnflag AS flag,
+    Some(s"""WITH m AS (SELECT l_returnflag AS flag,
                     CAST(count(*) AS BIGINT) AS n,
-                    CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
+                    CAST(sum(${Det.sqlRoundCents("l_extendedprice")})
                       AS BIGINT) AS sx,
                     CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sy,
-                    sum(CAST(CAST(round(l_extendedprice * 100) AS BIGINT)
+                    sum(CAST(${Det.sqlRoundCents("l_extendedprice")}
                              AS DECIMAL(38,0))
-                        * CAST(CAST(round(l_extendedprice * 100) AS BIGINT)
+                        * CAST(${Det.sqlRoundCents("l_extendedprice")}
                                AS DECIMAL(38,0))) AS sxx,
                     CAST(sum(CAST(l_quantity AS BIGINT)
                              * CAST(l_quantity AS BIGINT)) AS BIGINT)
                       AS syy,
-                    sum(CAST(CAST(round(l_extendedprice * 100) AS BIGINT)
+                    sum(CAST(${Det.sqlRoundCents("l_extendedprice")}
                              AS DECIMAL(38,0))
                         * CAST(CAST(l_quantity AS BIGINT)
                                AS DECIMAL(38,0))) AS sxy
@@ -5021,7 +4908,6 @@ object Analytics {
   val qFeatureSelectMi = Q(
     "q_feature_select_mi",
     (s, dir) => {
-      val Dec12 = org.apache.spark.sql.types.DecimalType(38, 12)
       val base = Tables.lineitem(s, dir)
         .select(expr("stack(5," +
           " 'discount', CAST(CAST(round(l_discount * 100) AS INT)" +
@@ -5305,11 +5191,7 @@ object Analytics {
     "q_time_forecast_eval",
     (s, dir) => {
       val wLag = Window.partitionBy("flag").orderBy("d")
-      Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag").as("flag"),
-          to_date(col("l_shipdate")).as("d"))
-        .agg(sum(expr("CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE)" +
-          " + CAST(0.5 AS DOUBLE)) AS BIGINT)")).as("v"))
+      Det.dailyCents(s, dir, "v")
         .withColumn("f_naive", lag(col("v"), 1).over(wLag))
         .withColumn("f_snaive", lag(col("v"), 7).over(wLag))
         .where(col("f_naive").isNotNull && col("f_snaive").isNotNull)
@@ -5327,12 +5209,8 @@ object Analytics {
             " END").as("mase"))
         .orderBy("flag")
     },
-    Some("""WITH daily AS (
-              SELECT l_returnflag AS flag, CAST(l_shipdate AS DATE) AS d,
-                CAST(SUM(CAST(floor(l_extendedprice
-                  * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT))
-                  AS BIGINT) AS v
-              FROM lineitem GROUP BY 1, 2),
+    Some(s"""WITH daily AS (
+              ${Det.sqlDailyCents("v")}),
              lagged AS (SELECT flag, d, v,
                       lag(v, 1) OVER (PARTITION BY flag ORDER BY d)
                         AS f_naive,
@@ -5376,11 +5254,7 @@ object Analytics {
     "q_time_lcss",
     (s, dir) => {
       val wRk = Window.partitionBy("flag").orderBy("d")
-      val daily = Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag").as("flag"),
-          to_date(col("l_shipdate")).as("d"))
-        .agg(sum(expr("CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE)" +
-          " + CAST(0.5 AS DOUBLE)) AS BIGINT)")).as("v"))
+      val daily = Det.dailyCents(s, dir, "v")
         .withColumn("rn", row_number().over(wRk))
       val n = daily.groupBy("flag").agg(count(lit(1)).as("n_days"))
       val ser = daily.join(broadcast(n), Seq("flag"))
@@ -5427,11 +5301,7 @@ object Analytics {
       val mt = "(CASE WHEN 10 * abs(xs[t] - ys[1])" +
         " <= greatest(abs(xs[t]), abs(ys[1])) THEN 1 ELSE 0 END)"
       s"""WITH RECURSIVE daily AS (
-              SELECT l_returnflag AS flag, CAST(l_shipdate AS DATE) AS d,
-                CAST(SUM(CAST(floor(l_extendedprice
-                  * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT))
-                  AS BIGINT) AS v
-              FROM lineitem GROUP BY 1, 2),
+              ${Det.sqlDailyCents("v")}),
              rk AS (SELECT flag, v,
                       row_number() OVER (PARTITION BY flag ORDER BY d)
                         AS rn,
@@ -5944,7 +5814,7 @@ object Analytics {
       val m = Tables.lineitem(s, dir)
         .select(col("l_quantity").cast("long").as("x1"),
           round(col("l_discount") * 100).cast("long").as("x2"),
-          round(col("l_extendedprice") * 100).cast("long").as("y"))
+          Det.roundCents("l_extendedprice").as("y"))
         .agg(count(lit(1)).as("n0"),
           sum(col("x1")).as("s1"), sum(col("x2")).as("s2"),
           sum(col("y")).as("sy"),
@@ -5990,7 +5860,7 @@ object Analytics {
                              - (det2 / det) * a2y)
                   / (ayy - ay * ay / n) END""").as("r2"))
     },
-    Some("""WITH m AS (SELECT CAST(count(*) AS BIGINT) AS n0,
+    Some(s"""WITH m AS (SELECT CAST(count(*) AS BIGINT) AS n0,
                     CAST(sum(x1) AS BIGINT) AS s1,
                     CAST(sum(x2) AS BIGINT) AS s2,
                     CAST(sum(y) AS BIGINT) AS sy,
@@ -6005,7 +5875,7 @@ object Analytics {
                         * CAST(y AS DECIMAL(38,0))) AS syy
                   FROM (SELECT CAST(l_quantity AS BIGINT) AS x1,
                           CAST(round(l_discount * 100) AS BIGINT) AS x2,
-                          CAST(round(l_extendedprice * 100) AS BIGINT) AS y
+                          ${Det.sqlRoundCents("l_extendedprice")} AS y
                         FROM lineitem)),
              d AS (SELECT n0, CAST(n0 AS DOUBLE) AS n,
                      CAST(s1 AS DOUBLE) AS a1, CAST(s2 AS DOUBLE) AS a2,
@@ -6309,7 +6179,7 @@ object Analytics {
     (s, dir) => {
       Tables.lineitem(s, dir)
         .select(col("l_returnflag").as("flag"),
-          round(col("l_extendedprice") * 100).cast("long").as("x"))
+          Det.roundCents("l_extendedprice").as("x"))
         .groupBy("flag")
         .agg(count(lit(1)).as("n"), sum(col("x")).as("s1"),
           sum(expr("CAST(x AS DECIMAL(38,0)) * CAST(x AS DECIMAL(38,0))"))
@@ -6332,7 +6202,7 @@ object Analytics {
             " ELSE g_max > CAST(3.0 AS DOUBLE) END"))
         .orderBy("flag")
     },
-    Some("""WITH m AS (SELECT l_returnflag AS flag,
+    Some(s"""WITH m AS (SELECT l_returnflag AS flag,
                     CAST(count(*) AS BIGINT) AS n,
                     CAST(sum(x) AS BIGINT) AS s1,
                     sum(CAST(x AS DECIMAL(38,0))
@@ -6340,7 +6210,7 @@ object Analytics {
                     CAST(min(x) AS BIGINT) AS x_min,
                     CAST(max(x) AS BIGINT) AS x_max
                   FROM (SELECT l_returnflag,
-                          CAST(round(l_extendedprice * 100) AS BIGINT)
+                          ${Det.sqlRoundCents("l_extendedprice")}
                             AS x FROM lineitem)
                   GROUP BY 1),
              d AS (SELECT *,
@@ -6546,7 +6416,7 @@ object Analytics {
       val o = Tables.orders(s, dir)
         .select(col("o_custkey").as("ck"),
           date_trunc("month", col("o_orderdate")).as("m"),
-          round(col("o_totalprice") * 100).cast("long").as("cents"))
+          Det.roundCents("o_totalprice").as("cents"))
       val firstM = o.groupBy("ck").agg(min(col("m")).as("cohort"))
       val sizes = firstM.groupBy("cohort")
         .agg(count(lit(1)).as("n_customers"))
@@ -6567,9 +6437,9 @@ object Analytics {
             .as("ltv_cents"))
         .orderBy("cohort", "age")
     },
-    Some("""WITH o AS (SELECT o_custkey AS ck,
+    Some(s"""WITH o AS (SELECT o_custkey AS ck,
                     date_trunc('month', o_orderdate) AS m,
-                    CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+                    ${Det.sqlRoundCents("o_totalprice")} AS cents
                   FROM orders),
              fm AS (SELECT ck, min(m) AS cohort FROM o GROUP BY ck),
              sz AS (SELECT cohort,
@@ -6607,7 +6477,7 @@ object Analytics {
     (s, dir) => {
       val g = Tables.lineitem(s, dir)
         .select(col("l_returnflag").as("flag"),
-          round(col("l_extendedprice") * 100).cast("long").as("x"))
+          Det.roundCents("l_extendedprice").as("x"))
         .groupBy("flag")
         .agg(count(lit(1)).as("n"), sum(col("x")).as("s1"),
           sum(expr("CAST(x AS DECIMAL(38,0)) * CAST(x AS DECIMAL(38,0))"))
@@ -6636,13 +6506,13 @@ object Analytics {
           expr("abs(diff_cents) / se").as("q_stat"))
         .orderBy("fa", "fb")
     },
-    Some("""WITH g AS (SELECT l_returnflag AS flag,
+    Some(s"""WITH g AS (SELECT l_returnflag AS flag,
                     CAST(count(*) AS BIGINT) AS n,
                     CAST(sum(x) AS BIGINT) AS s1,
                     sum(CAST(x AS DECIMAL(38,0))
                         * CAST(x AS DECIMAL(38,0))) AS s2
                   FROM (SELECT l_returnflag,
-                          CAST(round(l_extendedprice * 100) AS BIGINT)
+                          ${Det.sqlRoundCents("l_extendedprice")}
                             AS x FROM lineitem)
                   GROUP BY 1),
              w AS (SELECT CAST(sum(n) AS BIGINT) AS nn,
@@ -6750,10 +6620,10 @@ object Analytics {
         .groupBy(to_date(col("l_shipdate")).as("d"))
         .agg(
           sum(when(col("l_returnflag") === "R",
-            round(col("l_extendedprice") * 100).cast("long"))
+            Det.roundCents("l_extendedprice"))
             .otherwise(0L)).as("x"),
           sum(when(col("l_returnflag") === "N",
-            round(col("l_extendedprice") * 100).cast("long"))
+            Det.roundCents("l_extendedprice"))
             .otherwise(0L)).as("y"))
       val w = Window.orderBy("d")
       val lagged = daily
@@ -6804,12 +6674,12 @@ object Analytics {
             " ELSE (ssr_r - ssr_u) * CAST(t - 3 AS DOUBLE) / ssr_u END")
             .as("f_stat"))
     },
-    Some("""WITH daily AS (SELECT CAST(l_shipdate AS DATE) AS d,
+    Some(s"""WITH daily AS (SELECT CAST(l_shipdate AS DATE) AS d,
                     CAST(sum(CASE WHEN l_returnflag = 'R' THEN
-                      CAST(round(l_extendedprice * 100) AS BIGINT)
+                      ${Det.sqlRoundCents("l_extendedprice")}
                       ELSE 0 END) AS BIGINT) AS x,
                     CAST(sum(CASE WHEN l_returnflag = 'N' THEN
-                      CAST(round(l_extendedprice * 100) AS BIGINT)
+                      ${Det.sqlRoundCents("l_extendedprice")}
                       ELSE 0 END) AS BIGINT) AS y
                   FROM lineitem GROUP BY 1),
              lagged AS (SELECT y,
@@ -6944,11 +6814,7 @@ object Analytics {
     "q_time_turning_points",
     (s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      val daily = Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag").as("flag"),
-          to_date(col("l_shipdate")).as("d"))
-        .agg(sum(round(col("l_extendedprice") * 100).cast("long"))
-          .as("v"))
+      val daily = Det.dailyCents(s, dir, "v", rule = Det.sqlRoundCents)
       val w = Window.partitionBy("flag").orderBy("d")
       daily
         .withColumn("pv", lag(col("v"), 1).over(w))
@@ -6970,11 +6836,8 @@ object Analytics {
             .as("z"))
         .orderBy("flag")
     },
-    Some("""WITH daily AS (SELECT l_returnflag AS flag,
-                    CAST(l_shipdate AS DATE) AS d,
-                    CAST(sum(CAST(round(l_extendedprice * 100)
-                      AS BIGINT)) AS BIGINT) AS v
-                  FROM lineitem GROUP BY 1, 2),
+    Some(s"""WITH daily AS (${Det.sqlDailyCents("v",
+                  rule = Det.sqlRoundCents)}),
              lagged AS (SELECT flag, v,
                      lag(v, 1) OVER (PARTITION BY flag ORDER BY d)
                        AS pv,
@@ -7029,7 +6892,7 @@ object Analytics {
       // (Eager pins of pv/vr/g were A/B'd and LOST in-box — 3 pin jobs
       // put +1.4 s on the query at sf0.1.)
       val v = Tables.orders(s, dir).select(
-        col("o_orderpriority").as("pri"), expr(cents).as("v"))
+        col("o_orderpriority").as("pri"), Det.cents("o_totalprice").as("v"))
       val pv = v.groupBy("v", "pri").agg(count(lit(1)).as("c"))
       val vr = pv.groupBy("v").agg(sum(col("c")).as("cnt"))
       val cum = Prefix.runningSum(
@@ -7069,7 +6932,8 @@ object Analytics {
           col("k"), col("n"), col("h"), col("h_corr"))
         .orderBy("pri")
     },
-    Some(s"""WITH x AS (SELECT o_orderpriority AS pri, $cents AS v
+    Some(s"""WITH x AS (SELECT o_orderpriority AS pri,
+                    ${Det.sqlCents("o_totalprice")} AS v
                   FROM orders),
              pv AS (SELECT v, pri, CAST(count(*) AS BIGINT) AS c
                     FROM x GROUP BY 1, 2),
@@ -7124,7 +6988,8 @@ object Analytics {
     "q_agg_wilcoxon_signed",
     (s, dir) => {
       val pairs = Tables.orders(s, dir)
-        .select(col("o_custkey").as("ck"), expr(cents).as("cents"),
+        .select(col("o_custkey").as("ck"),
+          Det.cents("o_totalprice").as("cents"),
           when(month(col("o_orderdate")) <= 6, 1L).otherwise(0L)
             .as("h1"))
         .groupBy("ck")
@@ -7159,7 +7024,8 @@ object Analytics {
             " + CAST(1 AS DOUBLE)) / CAST(24 AS DOUBLE)" +
             " - CAST(ties AS DOUBLE) / CAST(48 AS DOUBLE))").as("z"))
     },
-    Some(s"""WITH x AS (SELECT o_custkey AS ck, $cents AS cents,
+    Some(s"""WITH x AS (SELECT o_custkey AS ck,
+                    ${Det.sqlCents("o_totalprice")} AS cents,
                     CASE WHEN month(o_orderdate) <= 6 THEN 1 ELSE 0 END
                       AS h1
                   FROM orders),
@@ -7210,11 +7076,7 @@ object Analytics {
   val qAggSignTest = Q(
     "q_agg_sign_test",
     (s, dir) => {
-      val daily = Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag").as("flag"),
-          to_date(col("l_shipdate")).as("d"))
-        .agg(sum(round(col("l_extendedprice") * 100).cast("long"))
-          .as("v"))
+      val daily = Det.dailyCents(s, dir, "v", rule = Det.sqlRoundCents)
       val w = Window.partitionBy("flag").orderBy("d")
       daily.withColumn("pv", lag(col("v"), 1).over(w))
         .where(col("pv").isNotNull)
@@ -7234,11 +7096,8 @@ object Analytics {
             " / sqrt(CAST(n_pos + n_neg AS DOUBLE)) END").as("z_abs"))
         .orderBy("flag")
     },
-    Some("""WITH daily AS (SELECT l_returnflag AS flag,
-                    CAST(l_shipdate AS DATE) AS d,
-                    CAST(sum(CAST(round(l_extendedprice * 100)
-                      AS BIGINT)) AS BIGINT) AS v
-                  FROM lineitem GROUP BY 1, 2),
+    Some(s"""WITH daily AS (${Det.sqlDailyCents("v",
+                  rule = Det.sqlRoundCents)}),
              lagged AS (SELECT flag, v,
                      lag(v, 1) OVER (PARTITION BY flag ORDER BY d) AS pv
                    FROM daily),
@@ -7280,7 +7139,7 @@ object Analytics {
           col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_nationkey").as("b"),
           col("o_orderpriority").as("pri"))
-        .agg(sum(expr(cents)).as("v"))
+        .agg(sum(Det.cents("o_totalprice")).as("v"))
       val fullB = cell.groupBy("b").agg(count(lit(1)).as("kc"))
         .where(col("kc") === 5).select("b")
       val kept = cell.join(fullB, Seq("b"))
@@ -7312,7 +7171,7 @@ object Analytics {
     },
     Some(s"""WITH cell AS (SELECT c_nationkey AS b,
                     o_orderpriority AS pri,
-                    CAST(sum($cents) AS BIGINT) AS v
+                    CAST(sum(${Det.sqlCents("o_totalprice")}) AS BIGINT) AS v
                   FROM orders JOIN customer ON o_custkey = c_custkey
                   GROUP BY 1, 2),
              full_b AS (SELECT b FROM cell GROUP BY b
@@ -7373,7 +7232,7 @@ object Analytics {
       // in-box (pin jobs cost more than the planning they save). The
       // original two-pass shape stands — see OPTIMIZATION_r22.md.
       val x = Tables.orders(s, dir).select(
-        col("o_orderpriority").as("pri"), expr(cents).as("v"))
+        col("o_orderpriority").as("pri"), Det.cents("o_totalprice").as("v"))
       val pv = x.groupBy("v").agg(count(lit(1)).as("cnt"))
       val cum = Prefix.runningSum(
         Prefix.withRangeBucket(pv, col("v"), 64, "__b"),
@@ -7410,7 +7269,8 @@ object Analytics {
         .select("pri", "n_g", "above", "below", "med", "chi2")
         .orderBy("pri")
     },
-    Some(s"""WITH x AS (SELECT o_orderpriority AS pri, $cents AS v
+    Some(s"""WITH x AS (SELECT o_orderpriority AS pri,
+                    ${Det.sqlCents("o_totalprice")} AS v
                   FROM orders),
              pv AS (SELECT v, CAST(count(*) AS BIGINT) AS cnt
                     FROM x GROUP BY v),
@@ -7540,7 +7400,7 @@ object Analytics {
   val qAggAndersonDarling = Q(
     "q_agg_anderson_darling",
     (s, dir) => {
-      val pv = Tables.orders(s, dir).select(expr(cents).as("v"))
+      val pv = Tables.orders(s, dir).select(Det.cents("o_totalprice").as("v"))
         .groupBy("v").agg(count(lit(1)).as("cnt"))
       val cum = Prefix.runningSum(
         Prefix.withRangeBucket(pv, col("v"), 64, "__b"),
@@ -7589,7 +7449,8 @@ object Analytics {
             " + CAST(0.6 AS DOUBLE) / CAST(n AS DOUBLE)), 6)"))
     },
     Some(s"""WITH pv AS (SELECT v, CAST(count(*) AS BIGINT) AS cnt
-                  FROM (SELECT $cents AS v FROM orders) GROUP BY v),
+                  FROM (SELECT ${Det.sqlCents("o_totalprice")} AS v
+                    FROM orders) GROUP BY v),
              cum AS (SELECT v, cnt,
                        CAST(sum(cnt) OVER (ORDER BY v
                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
@@ -7658,10 +7519,7 @@ object Analytics {
       // finals cast to double stays < 2^53 through sf1 (the hugeint→
       // double two-rounding class the periodogram documents); R/S is
       // scale-invariant so the coarsening only perturbs via truncation
-      val daily = Tables.lineitem(s, dir)
-        .groupBy(to_date(col("l_shipdate")).as("d"))
-        .agg(sum(expr("CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE)" +
-          " + CAST(0.5 AS DOUBLE)) AS BIGINT)")).as("yc"))
+      val daily = Det.dailyCents(s, dir, "yc", byFlag = false)
         .withColumn("y", expr("yc div 10000")).drop("yc")
         .withColumn("t", row_number().over(Window.orderBy("d")) - 1)
       val sizes = s.range(4, 7).select(col("id").cast(IntegerType).as("k"),
@@ -7706,10 +7564,9 @@ object Analytics {
           expr("round(z, 6)").as("mean_ln_rs"), col("hurst"))
         .orderBy("m")
     },
-    Some("""WITH daily AS (SELECT CAST(l_shipdate AS DATE) AS d,
-                    CAST(SUM(CAST(floor(l_extendedprice
-                      * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE))
-                      AS BIGINT)) // 10000 AS BIGINT) AS y
+    Some(s"""WITH daily AS (SELECT CAST(l_shipdate AS DATE) AS d,
+                    CAST(SUM(${Det.sqlCents("l_extendedprice")}) // 10000
+                      AS BIGINT) AS y
                   FROM lineitem GROUP BY 1),
              rk AS (SELECT y,
                       row_number() OVER (ORDER BY d) - 1 AS t
@@ -7779,11 +7636,7 @@ object Analytics {
       val wRk = Window.partitionBy("flag").orderBy("d")
       val arg = "CAST(2.0 AS DOUBLE) * pi() * CAST(t % p AS DOUBLE) " +
         "/ CAST(p AS DOUBLE)"
-      val daily = Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag").as("flag"),
-          to_date(col("l_shipdate")).as("d"))
-        .agg(sum(expr("CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE)" +
-          " + CAST(0.5 AS DOUBLE)) AS BIGINT)")).as("v"))
+      val daily = Det.dailyCents(s, dir, "v")
         .withColumn("t", row_number().over(wRk) - 1)
       val periods = s.range(2, 15).select(col("id").cast(IntegerType).as("p"))
       val pw = daily.crossJoin(broadcast(periods))
@@ -7825,12 +7678,8 @@ object Analytics {
             .as("entropy_norm"))
         .orderBy("flag")
     },
-    Some("""WITH daily AS (
-              SELECT l_returnflag AS flag, CAST(l_shipdate AS DATE) AS d,
-                CAST(SUM(CAST(floor(l_extendedprice
-                  * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT))
-                  AS BIGINT) AS v
-              FROM lineitem GROUP BY 1, 2),
+    Some(s"""WITH daily AS (
+              ${Det.sqlDailyCents("v")}),
              rk AS (SELECT flag, v,
                       row_number() OVER (PARTITION BY flag ORDER BY d) - 1
                         AS t
@@ -7887,11 +7736,7 @@ object Analytics {
     "q_time_theil_u",
     (s, dir) => {
       val w = Window.partitionBy("flag").orderBy("d")
-      val daily = Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag").as("flag"),
-          to_date(col("l_shipdate")).as("d"))
-        .agg(sum(expr("CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE)" +
-          " + CAST(0.5 AS DOUBLE)) AS BIGINT)")).as("y"))
+      val daily = Det.dailyCents(s, dir, "y")
       val lagged = daily
         .withColumn("f7", lag(col("y"), 7).over(w))
         .withColumn("f1", lag(col("y"), 1).over(w))
@@ -7916,12 +7761,7 @@ object Analytics {
             .as("u1"))
         .orderBy("flag")
     },
-    Some("""WITH daily AS (SELECT l_returnflag AS flag,
-                    CAST(l_shipdate AS DATE) AS d,
-                    CAST(SUM(CAST(floor(l_extendedprice
-                      * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE))
-                      AS BIGINT)) AS BIGINT) AS y
-                  FROM lineitem GROUP BY 1, 2),
+    Some(s"""WITH daily AS (${Det.sqlDailyCents("y")}),
              lagged AS (SELECT flag, y,
                       lag(y, 7) OVER (PARTITION BY flag ORDER BY d) AS f7,
                       lag(y, 1) OVER (PARTITION BY flag ORDER BY d) AS f1
@@ -7973,10 +7813,7 @@ object Analytics {
       // $100-unit carrier: the n²-scaled moments cast to double stay
       // < 2^53 through sf1 (hugeint→double two-rounding class); ACF is
       // unit-free so only the deterministic truncation perturbs
-      val daily = Tables.lineitem(s, dir)
-        .groupBy(to_date(col("l_shipdate")).as("d"))
-        .agg(sum(expr("CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE)" +
-          " + CAST(0.5 AS DOUBLE)) AS BIGINT)")).as("yc"))
+      val daily = Det.dailyCents(s, dir, "yc", byFlag = false)
         .withColumn("y", expr("yc div 10000")).drop("yc")
       val w = Window.orderBy("d")
       val lagged = daily
@@ -8033,10 +7870,9 @@ object Analytics {
           expr("round(pacf2, 6)").as("pacf2"),
           expr("round(pacf3, 6)").as("pacf3"))
     },
-    Some("""WITH daily AS (SELECT CAST(l_shipdate AS DATE) AS d,
-                    CAST(SUM(CAST(floor(l_extendedprice
-                      * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE))
-                      AS BIGINT)) // 10000 AS BIGINT) AS y
+    Some(s"""WITH daily AS (SELECT CAST(l_shipdate AS DATE) AS d,
+                    CAST(SUM(${Det.sqlCents("l_extendedprice")}) // 10000
+                      AS BIGINT) AS y
                   FROM lineitem GROUP BY 1),
              lagged AS (SELECT y,
                       lag(y, 1) OVER (ORDER BY d) AS y1,
@@ -8117,6 +7953,11 @@ object Analytics {
                      6) AS pacf3
             FROM f3"""))
 
+  // a line's discounted price, the y of q_agg_deming/q_agg_concordance;
+  // a product, so it goes into the cents rule as is
+  private val netPrice =
+    "l_extendedprice * (CAST(1.0 AS DOUBLE) - l_discount)"
+
   /** Deming regression — method comparison when BOTH variables carry
     * error (OLS assumes an error-free x, so regressing one measurement
     * method on another biases the slope toward 0; Deming's
@@ -8136,12 +7977,8 @@ object Analytics {
     (s, dir) => {
       val xy = Tables.lineitem(s, dir)
         .groupBy(col("l_orderkey").as("ok"))
-        .agg(sum(expr("CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE)" +
-          " + CAST(0.5 AS DOUBLE)) AS BIGINT)")).as("x"),
-          sum(expr("CAST(floor(l_extendedprice" +
-            " * (CAST(1.0 AS DOUBLE) - l_discount)" +
-            " * CAST(100.0 AS DOUBLE)" +
-            " + CAST(0.5 AS DOUBLE)) AS BIGINT)")).as("y"))
+        .agg(sum(Det.cents("l_extendedprice")).as("x"),
+          sum(Det.cents(netPrice)).as("y"))
       val dd = (a: String, b: String) =>
         s"CAST(CAST($a AS DECIMAL(38,0)) * CAST($b AS DECIMAL(38,0))" +
           s" AS DECIMAL(38,0))"
@@ -8171,13 +8008,9 @@ object Analytics {
             " round(cxy / sqrt(cxx * cyy), 6) END").as("pearson_r"))
     },
     Some(s"""WITH xy AS (SELECT l_orderkey AS ok,
-                    CAST(sum(CAST(floor(l_extendedprice
-                      * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE))
-                      AS BIGINT)) AS BIGINT) AS x,
-                    CAST(sum(CAST(floor(l_extendedprice
-                      * (CAST(1.0 AS DOUBLE) - l_discount)
-                      * CAST(100.0 AS DOUBLE)
-                      + CAST(0.5 AS DOUBLE)) AS BIGINT)) AS BIGINT) AS y
+                    CAST(sum(${Det.sqlCents("l_extendedprice")}) AS BIGINT)
+                      AS x,
+                    CAST(sum(${Det.sqlCents(netPrice)}) AS BIGINT) AS y
                   FROM lineitem GROUP BY 1),
              m AS (SELECT CAST(count(*) AS BIGINT) AS n,
                      CAST(sum(x) AS BIGINT) AS sx,
@@ -8232,12 +8065,8 @@ object Analytics {
     (s, dir) => {
       val xy = Tables.lineitem(s, dir)
         .groupBy(col("l_orderkey").as("ok"))
-        .agg(sum(expr("CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE)" +
-          " + CAST(0.5 AS DOUBLE)) AS BIGINT)")).as("x"),
-          sum(expr("CAST(floor(l_extendedprice" +
-            " * (CAST(1.0 AS DOUBLE) - l_discount)" +
-            " * CAST(100.0 AS DOUBLE)" +
-            " + CAST(0.5 AS DOUBLE)) AS BIGINT)")).as("y"))
+        .agg(sum(Det.cents("l_extendedprice")).as("x"),
+          sum(Det.cents(netPrice)).as("y"))
         .withColumn("diff", col("x") - col("y"))
       val dd = (a: String, b: String) =>
         s"CAST(CAST($a AS DECIMAL(38,0)) * CAST($b AS DECIMAL(38,0))" +
@@ -8290,19 +8119,11 @@ object Analytics {
           col("n_outside"))
     },
     Some(s"""WITH xy AS (SELECT l_orderkey AS ok,
-                    CAST(sum(CAST(floor(l_extendedprice
-                      * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE))
-                      AS BIGINT)) AS BIGINT) AS x,
-                    CAST(sum(CAST(floor(l_extendedprice
-                      * (CAST(1.0 AS DOUBLE) - l_discount)
-                      * CAST(100.0 AS DOUBLE)
-                      + CAST(0.5 AS DOUBLE)) AS BIGINT)) AS BIGINT) AS y,
-                    CAST(sum(CAST(floor(l_extendedprice
-                      * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE))
-                      AS BIGINT)) - sum(CAST(floor(l_extendedprice
-                      * (CAST(1.0 AS DOUBLE) - l_discount)
-                      * CAST(100.0 AS DOUBLE)
-                      + CAST(0.5 AS DOUBLE)) AS BIGINT)) AS BIGINT)
+                    CAST(sum(${Det.sqlCents("l_extendedprice")}) AS BIGINT)
+                      AS x,
+                    CAST(sum(${Det.sqlCents(netPrice)}) AS BIGINT) AS y,
+                    CAST(sum(${Det.sqlCents("l_extendedprice")}) -
+                      sum(${Det.sqlCents(netPrice)}) AS BIGINT)
                       AS diff
                   FROM lineitem GROUP BY 1),
              m AS (SELECT CAST(count(*) AS BIGINT) AS n,
@@ -8376,9 +8197,10 @@ object Analytics {
         .join(Tables.customer(s, dir),
           col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_nationkey").as("grp"))
-        .agg(count(lit(1)).as("ng"), sum(expr(cents)).as("sg"),
-          sum(expr(s"CAST(CAST($cents AS DECIMAL(38,0))" +
-            s" * CAST($cents AS DECIMAL(38,0)) AS DECIMAL(38,0))"))
+        .agg(count(lit(1)).as("ng"), sum(Det.cents("o_totalprice")).as("sg"),
+          sum(expr(s"CAST(CAST(${Det.sqlCents("o_totalprice")}" +
+            s" AS DECIMAL(38,0)) * CAST(${Det.sqlCents("o_totalprice")}" +
+            " AS DECIMAL(38,0)) AS DECIMAL(38,0))"))
             .as("qg"))
       // sg²/ng in double over identical operands, Dec12-quantized
       // before the bounded 25-group sum — the q_agg_anova doctrine
@@ -8408,7 +8230,8 @@ object Analytics {
             " round((msb - msw) / (msb + (n0 - CAST(1 AS DOUBLE))" +
             " * msw), 6) END").as("icc"))
     },
-    Some(s"""WITH x AS (SELECT c_nationkey AS grp, $cents AS v
+    Some(s"""WITH x AS (SELECT c_nationkey AS grp,
+                    ${Det.sqlCents("o_totalprice")} AS v
                   FROM orders JOIN customer ON o_custkey = c_custkey),
              g AS (SELECT grp, CAST(count(*) AS BIGINT) AS ng,
                      CAST(sum(v) AS BIGINT) AS sg,
@@ -8457,10 +8280,7 @@ object Analytics {
   val qTimeLjungBox = Q(
     "q_time_ljung_box",
     (s, dir) => {
-      val daily = Tables.lineitem(s, dir)
-        .groupBy(to_date(col("l_shipdate")).as("d"))
-        .agg(sum(expr("CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE)" +
-          " + CAST(0.5 AS DOUBLE)) AS BIGINT)")).as("yc"))
+      val daily = Det.dailyCents(s, dir, "yc", byFlag = false)
         .withColumn("y", expr("yc div 10000")).drop("yc")
       val w = Window.orderBy("d")
       val lagged = daily
@@ -8508,10 +8328,9 @@ object Analytics {
             " + r2 * r2 / CAST(n - 2 AS DOUBLE)" +
             " + r3 * r3 / CAST(n - 3 AS DOUBLE)), 6) END").as("q_stat"))
     },
-    Some("""WITH daily AS (SELECT CAST(l_shipdate AS DATE) AS d,
-                    CAST(SUM(CAST(floor(l_extendedprice
-                      * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE))
-                      AS BIGINT)) // 10000 AS BIGINT) AS y
+    Some(s"""WITH daily AS (SELECT CAST(l_shipdate AS DATE) AS d,
+                    CAST(SUM(${Det.sqlCents("l_extendedprice")}) // 10000
+                      AS BIGINT) AS y
                   FROM lineitem GROUP BY 1),
              lagged AS (SELECT y,
                       lag(y, 1) OVER (ORDER BY d) AS y1,
@@ -8600,10 +8419,7 @@ object Analytics {
   val qTimeDurbinWatson = Q(
     "q_time_durbin_watson",
     (s, dir) => {
-      val daily = Tables.lineitem(s, dir)
-        .groupBy(to_date(col("l_shipdate")).as("d"))
-        .agg(sum(expr("CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE)" +
-          " + CAST(0.5 AS DOUBLE)) AS BIGINT)")).as("yc"))
+      val daily = Det.dailyCents(s, dir, "yc", byFlag = false)
         .withColumn("y", expr("yc div 10000")).drop("yc")
         .withColumn("t",
           (row_number().over(Window.orderBy("d")) - 1).cast("long"))
@@ -8640,10 +8456,9 @@ object Analytics {
           expr("CASE WHEN sse <= CAST(0 AS DOUBLE) THEN NULL" +
             " ELSE round(num / sse, 6) END").as("dw"))
     },
-    Some("""WITH daily AS (SELECT CAST(l_shipdate AS DATE) AS d,
-                    CAST(SUM(CAST(floor(l_extendedprice
-                      * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE))
-                      AS BIGINT)) // 10000 AS BIGINT) AS y
+    Some(s"""WITH daily AS (SELECT CAST(l_shipdate AS DATE) AS d,
+                    CAST(SUM(${Det.sqlCents("l_extendedprice")}) // 10000
+                      AS BIGINT) AS y
                   FROM lineitem GROUP BY 1),
              idx AS (SELECT y,
                        CAST(row_number() OVER (ORDER BY d) - 1 AS BIGINT)
@@ -8799,8 +8614,7 @@ object Analytics {
       val m = Tables.lineitem(s, dir)
         .where(col("l_returnflag").isin("R", "N"))
         .select(col("l_returnflag").as("g"),
-          expr("CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE)" +
-            " + CAST(0.5 AS DOUBLE)) AS BIGINT)").as("v"))
+          Det.cents("l_extendedprice").as("v"))
         .groupBy("g")
         .agg(count(lit(1)).as("n"), sum(col("v")).as("s"),
           sum(expr(dd("v"))).as("ss"))
@@ -8835,17 +8649,14 @@ object Analytics {
             " > CAST(1.645 AS DOUBLE) THEN 1 ELSE 0 END AS INT)")
             .as("equivalent"))
     },
-    Some("""WITH m AS (SELECT l_returnflag AS g,
+    Some(s"""WITH m AS (SELECT l_returnflag AS g,
                     CAST(count(*) AS BIGINT) AS n,
-                    CAST(sum(CAST(floor(l_extendedprice
-                      * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE))
-                      AS BIGINT)) AS BIGINT) AS s,
-                    sum(CAST(CAST(CAST(floor(l_extendedprice
-                      * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE))
-                      AS BIGINT) AS DECIMAL(38,0))
-                      * CAST(CAST(floor(l_extendedprice
-                      * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE))
-                      AS BIGINT) AS DECIMAL(38,0)) AS DECIMAL(38,0)))
+                    CAST(sum(${Det.sqlCents("l_extendedprice")}) AS BIGINT)
+                      AS s,
+                    sum(CAST(CAST(${Det.sqlCents("l_extendedprice")}
+                      AS DECIMAL(38,0))
+                      * CAST(${Det.sqlCents("l_extendedprice")}
+                        AS DECIMAL(38,0)) AS DECIMAL(38,0)))
                       AS ss
                   FROM lineitem WHERE l_returnflag IN ('R', 'N')
                   GROUP BY 1),
@@ -8899,9 +8710,10 @@ object Analytics {
     (s, dir) => {
       val m = Tables.orders(s, dir)
         .groupBy(col("o_orderpriority").as("pri"))
-        .agg(count(lit(1)).as("n"), sum(expr(cents)).as("sv"),
-          sum(expr(s"CAST(CAST($cents AS DECIMAL(38,0))" +
-            s" * CAST($cents AS DECIMAL(38,0)) AS DECIMAL(38,0))"))
+        .agg(count(lit(1)).as("n"), sum(Det.cents("o_totalprice")).as("sv"),
+          sum(expr(s"CAST(CAST(${Det.sqlCents("o_totalprice")}" +
+            s" AS DECIMAL(38,0)) * CAST(${Det.sqlCents("o_totalprice")}" +
+            " AS DECIMAL(38,0)) AS DECIMAL(38,0))"))
             .as("ssv"),
           countDistinct(col("o_orderdate")).as("days"))
       m.select(col("pri"), col("n"), col("days"),
@@ -8928,9 +8740,11 @@ object Analytics {
     },
     Some(s"""WITH m AS (SELECT o_orderpriority AS pri,
                     CAST(count(*) AS BIGINT) AS n,
-                    CAST(sum($cents) AS BIGINT) AS sv,
-                    sum(CAST(CAST($cents AS DECIMAL(38,0))
-                      * CAST($cents AS DECIMAL(38,0)) AS DECIMAL(38,0)))
+                    CAST(sum(${Det.sqlCents("o_totalprice")}) AS BIGINT) AS sv,
+                    sum(CAST(CAST(${Det.sqlCents("o_totalprice")}
+                      AS DECIMAL(38,0))
+                      * CAST(${Det.sqlCents("o_totalprice")} AS DECIMAL(38,0))
+                        AS DECIMAL(38,0)))
                       AS ssv,
                     CAST(count(DISTINCT o_orderdate) AS BIGINT) AS days
                   FROM orders GROUP BY 1),
@@ -8981,7 +8795,7 @@ object Analytics {
           col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_custkey").as("ck"),
           col("c_nationkey").as("grp"))
-        .agg(sum(expr(cents)).as("x"))
+        .agg(sum(Det.cents("o_totalprice")).as("x"))
         .where(col("x") > 0L)
       val tot = cust.agg(count(lit(1)).as("n"), sum(col("x")).as("xx"))
       val wt = cust.crossJoin(broadcast(tot))
@@ -9025,10 +8839,10 @@ object Analytics {
         .orderBy("grp")
     },
     Some(s"""WITH cust AS (SELECT o_custkey AS ck, c_nationkey AS grp,
-                    CAST(sum($cents) AS BIGINT) AS x
+                    CAST(sum(${Det.sqlCents("o_totalprice")}) AS BIGINT) AS x
                   FROM orders JOIN customer ON o_custkey = c_custkey
                   GROUP BY 1, 2
-                  HAVING sum($cents) > 0),
+                  HAVING sum(${Det.sqlCents("o_totalprice")}) > 0),
              tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
                        CAST(sum(x) AS BIGINT) AS xx FROM cust),
              wt AS (SELECT grp, x, n, xx,
@@ -9089,7 +8903,8 @@ object Analytics {
     "q_agg_lognormal_fit",
     (s, dir) => {
       val x = Tables.orders(s, dir)
-        .select(col("o_orderpriority").as("pri"), expr(cents).as("v"))
+        .select(col("o_orderpriority").as("pri"),
+          Det.cents("o_totalprice").as("v"))
         .where(col("v") > 0L)
         .withColumn("lx", expr("ln(CAST(v AS DOUBLE))"))
       x.groupBy("pri")
@@ -9121,7 +8936,8 @@ object Analytics {
     },
     Some(s"""WITH x AS (SELECT o_orderpriority AS pri, v,
                     ln(CAST(v AS DOUBLE)) AS lx
-                  FROM (SELECT o_orderpriority, $cents AS v FROM orders)
+                  FROM (SELECT o_orderpriority,
+                    ${Det.sqlCents("o_totalprice")} AS v FROM orders)
                   WHERE v > 0),
              m AS (SELECT pri, CAST(count(*) AS BIGINT) AS n,
                      CAST(sum(v) AS BIGINT) AS sv,
@@ -9167,7 +8983,7 @@ object Analytics {
     "q_agg_hill_tail",
     (s, dir) => {
       val top = Tables.orders(s, dir)
-        .select(col("o_orderkey").as("k"), expr(cents).as("v"))
+        .select(col("o_orderkey").as("k"), Det.cents("o_totalprice").as("v"))
         .orderBy(col("v").desc, col("k").asc).limit(101)
       val w = Window.orderBy(col("v").desc, col("k").asc)
       val ranked = top.withColumn("rn", row_number().over(w))
@@ -9185,7 +9001,8 @@ object Analytics {
             .as("alpha_hill"))
     },
     Some(s"""WITH top AS (SELECT o_orderkey AS k, v
-                  FROM (SELECT o_orderkey, $cents AS v FROM orders)
+                  FROM (SELECT o_orderkey, ${Det.sqlCents("o_totalprice")}
+                    AS v FROM orders)
                   ORDER BY v DESC, k ASC LIMIT 101),
              ranked AS (SELECT v,
                           row_number() OVER (ORDER BY v DESC, k ASC)

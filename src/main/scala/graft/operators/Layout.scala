@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongType}
-import graft.Q
+import graft.{Det, Q}
 import graft.sources.Tables
 
 /** Multi-dimensional data LAYOUT for scan pruning — the write-side half of
@@ -95,8 +95,8 @@ object Layout {
           min(col("l_orderkey")).as("min_okey"),
           max(col("l_orderkey")).as("max_okey"))
         .orderBy("l_returnflag"),
-    Some("""SELECT l_returnflag, count(*) AS n,
-                   CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
+    Some(s"""SELECT l_returnflag, count(*) AS n,
+                   CAST(sum(${Det.sqlRoundCents("l_extendedprice")})
                      AS BIGINT) AS sum_cents,
                    min(l_orderkey) AS min_okey, max(l_orderkey) AS max_okey
             FROM lineitem
@@ -179,8 +179,8 @@ object Layout {
           max(col("o_orderkey")).as("max_key"))
         .orderBy("o_orderstatus")
     },
-    Some("""SELECT o_orderstatus, count(*) AS n,
-                   CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
+    Some(s"""SELECT o_orderstatus, count(*) AS n,
+                   CAST(sum(${Det.sqlRoundCents("o_totalprice")})
                      AS BIGINT) AS sum_cents,
                    min(o_orderkey) AS min_key, max(o_orderkey) AS max_key
             FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus"""))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 import graft.{Det, Q}
+import graft.Det.{Dec0, Dec12}
 import graft.sources.Tables
 
 /** LLM-training-data pipeline operators — SURVEY.md §2.J (mandated
@@ -781,7 +782,6 @@ object Llm {
   val qCorpusDrift = Q(
     "q_corpus_drift",
     (s, dir) => {
-      val Dec0 = org.apache.spark.sql.types.DecimalType(38, 0)
       val t = Tables.documents(s, dir)
         .select(col("lang"), explode(split(col("text"), " ")).as("tok"))
         .where(length(col("tok")) > 0)
@@ -3245,7 +3245,6 @@ object Llm {
   val qTextZipfFit = Q(
     "q_text_zipf_fit",
     (s, dir) => {
-      val Dec12 = org.apache.spark.sql.types.DecimalType(38, 12)
       val q12 = (e: String) => s"CAST(CAST(($e) AS DECIMAL(38,12)) AS DOUBLE)"
       val top = tokens(Tables.documents(s, dir))
         .groupBy("tok").agg(count(lit(1)).as("f"))
@@ -3513,7 +3512,7 @@ object Llm {
         min(when(col("r") === 1, col("rk"))).as("first_rel_rk"),
         sum(expr(q12("CASE WHEN rk <= 10 THEN CAST(r AS DOUBLE) " +
           "/ log2(CAST(rk + 1 AS DOUBLE)) ELSE 0.0 END"))
-          .cast(org.apache.spark.sql.types.DecimalType(38, 12)))
+          .cast(Dec12))
           .cast("double").as("dcg10"))
       val idcg = nRel.select(col("n_rel"),
         explode(expr("sequence(1, greatest(least(n_rel, 10), 1))"))
@@ -3521,7 +3520,7 @@ object Llm {
         .groupBy("n_rel")
         .agg(sum(expr(q12("CASE WHEN n_rel > 0 THEN 1.0 " +
           "/ log2(CAST(i + 1 AS DOUBLE)) ELSE 0.0 END"))
-          .cast(org.apache.spark.sql.types.DecimalType(38, 12)))
+          .cast(Dec12))
           .cast("double").as("idcg10"))
       dcg.crossJoin(broadcast(idcg))
         .select(col("n_rel"),
@@ -4694,7 +4693,6 @@ object Llm {
   val qMlNaiveBayes = Q(
     "q_ml_naive_bayes",
     (s, dir) => {
-      val Dec12 = org.apache.spark.sql.types.DecimalType(38, 12)
       val docs = Tables.documents(s, dir)
         .select(col("doc_id"), col("source"), col("text"),
           (pmod(Det.pHash60(col("doc_id")), lit(100)) < 80).as("tr"),

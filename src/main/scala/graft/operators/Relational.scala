@@ -805,11 +805,11 @@ object Relational {
           min(col("k")).as("min_key"), max(col("k")).as("max_key"))
         .orderBy("seg", "action")
     },
-    Some("""WITH base AS (SELECT c_custkey AS k, c_mktsegment AS seg,
-                   CAST(round(c_acctbal * 100) AS BIGINT) AS bal
+    Some(s"""WITH base AS (SELECT c_custkey AS k, c_mktsegment AS seg,
+                   ${Det.sqlRoundCents("c_acctbal")} AS bal
                  FROM customer),
             delta AS (SELECT c_custkey AS k, c_mktsegment AS seg,
-                             CAST(round(c_acctbal * 100) AS BIGINT) + 1000
+                             ${Det.sqlRoundCents("c_acctbal")} + 1000
                                AS bal
                       FROM customer WHERE c_mktsegment = 'BUILDING'
                       UNION ALL
@@ -876,14 +876,14 @@ object Relational {
             .otherwise(0L)).as("sum_cents_live"))
         .orderBy("seg")
     },
-    Some("""WITH base AS (SELECT c_custkey AS k, c_mktsegment AS seg,
-                   CAST(round(c_acctbal * 100) AS BIGINT) AS bal
+    Some(s"""WITH base AS (SELECT c_custkey AS k, c_mktsegment AS seg,
+                   ${Det.sqlRoundCents("c_acctbal")} AS bal
                  FROM customer),
             log AS (SELECT o_custkey AS k, o_orderdate AS ts,
                       o_orderkey AS seq,
                       CASE WHEN o_orderkey % 10 = 0 THEN 'D' ELSE 'U' END
                         AS op,
-                      CAST(round(o_totalprice * 100) AS BIGINT) AS new_bal
+                      ${Det.sqlRoundCents("o_totalprice")} AS new_bal
                     FROM orders),
             compacted AS (SELECT k, op, new_bal
                           FROM (SELECT *, row_number() OVER (
@@ -1235,10 +1235,10 @@ object Relational {
           col("o_orderdate").cast("date").cast("string").as("order_day"),
           col("o_orderpriority"), col("revenue_cc"))
     },
-    Some("""SELECT o_orderkey,
+    Some(s"""SELECT o_orderkey,
                    CAST(CAST(o_orderdate AS DATE) AS VARCHAR) AS order_day,
                    o_orderpriority,
-                   CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT) *
+                   CAST(sum(${Det.sqlRoundCents("l_extendedprice")} *
                             (100 - CAST(round(l_discount * 100) AS BIGINT)))
                      AS BIGINT) AS revenue_cc
             FROM orders o
@@ -1380,12 +1380,6 @@ object Relational {
                     JOIN support sb ON co.pb = sb.part
             ORDER BY cosine DESC, pa, pb LIMIT 20"""))
 
-  // whole-cents total via the bit-portable nearest-int (§7.2: floor(x+0.5)
-  // is pure IEEE in both engines; engine round() diverges at ties)
-  private val centsFml =
-    "CAST(floor(o_totalprice * CAST(100.0 AS DOUBLE) " +
-      "+ CAST(0.5 AS DOUBLE)) AS BIGINT)"
-
   /** Largest-remainder proration — the exact-allocation operator every
     * billing/finance pipeline needs: split an order's total (whole cents)
     * across its line items proportionally to quantity so the allocated
@@ -1418,7 +1412,7 @@ object Relational {
         .agg(sum(col("l_quantity")
           .cast(org.apache.spark.sql.types.LongType)).as("q"))
         .join(Tables.orders(s, dir)
-          .select(col("o_orderkey"), expr(centsFml).as("tot_c")),
+          .select(col("o_orderkey"), Det.cents("o_totalprice").as("tot_c")),
           col("l_orderkey") === col("o_orderkey"))
         .withColumn("qsum", sum(col("q")).over(wOrd))
         .withColumn("base", expr("(tot_c * q) div qsum"))
@@ -1433,7 +1427,8 @@ object Relational {
     Some(s"""WITH li AS (SELECT l_orderkey, l_linenumber,
                     CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS q
                   FROM lineitem GROUP BY 1, 2),
-             o AS (SELECT o_orderkey, $centsFml AS tot_c FROM orders),
+             o AS (SELECT o_orderkey, ${Det.sqlCents("o_totalprice")} AS tot_c
+               FROM orders),
              j AS (SELECT li.*, o.tot_c,
                      CAST(SUM(q) OVER (PARTITION BY l_orderkey) AS BIGINT)
                        AS qsum
@@ -1470,11 +1465,9 @@ object Relational {
   val qSnapshotDiff = Q(
     "q_snapshot_diff",
     (s, dir) => {
-      val cents = expr("CAST(floor(o_totalprice * CAST(100.0 AS DOUBLE) " +
-        "+ CAST(0.5 AS DOUBLE)) AS BIGINT)")
       val base = Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_orderstatus"),
-          col("o_orderdate"), cents.as("c"))
+          col("o_orderdate"), Det.cents("o_totalprice").as("c"))
       val snapA = base
         .where(col("o_orderdate") < lit("1997-01-01"))
         .select(col("o_orderkey"), col("o_orderstatus").as("a_status"),
@@ -1494,13 +1487,12 @@ object Relational {
           coalesce(col("b_c"), col("a_c")).as("c"))
         .groupBy("change_type")
         .agg(count(lit(1)).as("n"),
-          sum(col("c").cast(org.apache.spark.sql.types.DecimalType(38, 0)))
+          sum(col("c").cast(Det.Dec0))
             .cast(org.apache.spark.sql.types.LongType).as("cents_sum"))
         .orderBy("change_type")
     },
-    Some("""WITH base AS (SELECT o_orderkey, o_orderstatus, o_orderdate,
-                    CAST(floor(o_totalprice * CAST(100.0 AS DOUBLE)
-                      + CAST(0.5 AS DOUBLE)) AS BIGINT) AS c
+    Some(s"""WITH base AS (SELECT o_orderkey, o_orderstatus, o_orderdate,
+                    ${Det.sqlCents("o_totalprice")} AS c
                   FROM orders),
              a AS (SELECT o_orderkey, o_orderstatus AS a_status,
                           c AS a_c
@@ -1920,9 +1912,7 @@ object Relational {
     "q_join_range_bucketed",
     (s, dir) => {
       val W = 10000L // band half-width in cents (= $100)
-      def cents(c: String) =
-        expr(s"CAST(floor($c * CAST(100.0 AS DOUBLE) " +
-          s"+ CAST(0.5 AS DOUBLE)) AS BIGINT) + 20000000")
+      def cents(c: String) = expr(s"${Det.sqlCents(c)} + 20000000")
       val cust = Tables.customer(s, dir)
         .select(col("c_custkey"), cents("c_acctbal").as("cc"))
         .withColumn("b", expr(s"cc DIV $W"))
@@ -1939,13 +1929,11 @@ object Relational {
           countDistinct(col("c_custkey")).as("n_customers"))
         .orderBy("s_nationkey")
     },
-    Some("""SELECT s_nationkey, count(*) AS n_pairs,
+    Some(s"""SELECT s_nationkey, count(*) AS n_pairs,
                    count(DISTINCT c_custkey) AS n_customers
             FROM customer JOIN supplier
-              ON abs((CAST(floor(c_acctbal * CAST(100.0 AS DOUBLE)
-                   + CAST(0.5 AS DOUBLE)) AS BIGINT) + 20000000)
-                 - (CAST(floor(s_acctbal * CAST(100.0 AS DOUBLE)
-                   + CAST(0.5 AS DOUBLE)) AS BIGINT) + 20000000))
+              ON abs((${Det.sqlCents("c_acctbal")} + 20000000)
+                 - (${Det.sqlCents("s_acctbal")} + 20000000))
                  <= 10000
             GROUP BY s_nationkey ORDER BY s_nationkey"""))
 
@@ -2348,13 +2336,11 @@ object Relational {
   val qViewIncremental = Q(
     "q_view_incremental",
     (s, dir) => {
-      val cents = "CAST(floor(o_totalprice * CAST(100.0 AS DOUBLE)" +
-        " + CAST(0.5 AS DOUBLE)) AS BIGINT)"
       def agg(lo: String, hi: String) = Tables.orders(s, dir)
         .where(col("o_orderdate") >= lit(lo).cast("date")
           && col("o_orderdate") < lit(hi).cast("date"))
         .groupBy(col("o_orderpriority").as("pri"))
-        .agg(count(lit(1)).as("cnt"), sum(expr(cents)).as("rev"))
+        .agg(count(lit(1)).as("cnt"), sum(Det.cents("o_totalprice")).as("rev"))
       // view as of 1997-01-01: window [1995-01-01, 1997-01-01)
       val base = agg("1995-01-01", "1997-01-01")
       // advance to 1997-07-01: inserts [1997-01-01, 1997-07-01),
@@ -2381,12 +2367,10 @@ object Relational {
         .orderBy("pri")
     },
     Some {
-      val cents = "CAST(floor(o_totalprice * CAST(100.0 AS DOUBLE)" +
-        " + CAST(0.5 AS DOUBLE)) AS BIGINT)"
       def agg(lo: String, hi: String) =
         s"""SELECT o_orderpriority AS pri,
               CAST(count(*) AS BIGINT) AS cnt,
-              CAST(sum($cents) AS BIGINT) AS rev
+              CAST(sum(${Det.sqlCents("o_totalprice")}) AS BIGINT) AS rev
             FROM orders
             WHERE o_orderdate >= DATE '$lo' AND o_orderdate < DATE '$hi'
             GROUP BY 1"""
@@ -2433,8 +2417,7 @@ object Relational {
     "q_geo_moran_i",
     (s, dir) => {
       val pts = Tables.events(s, dir).select(
-        expr("CAST(floor(value * CAST(100.0 AS DOUBLE)" +
-          " + CAST(0.5 AS DOUBLE)) AS BIGINT)").as("v"),
+        Det.cents("value").as("v"),
         floor(pmod(Det.pHash32(concat(col("event_id").cast("string"),
           lit("x"))), lit(1024)).cast(DoubleType) / 1024.0 * 16)
           .cast(IntegerType).as("cx"),
@@ -2473,9 +2456,8 @@ object Relational {
           expr("round(CAST(-1 AS DOUBLE)" +
             " / CAST(n - 1 AS DOUBLE), 6)").as("expected_i"))
     },
-    Some("""WITH pts AS (SELECT
-                    CAST(floor(value * CAST(100.0 AS DOUBLE)
-                      + CAST(0.5 AS DOUBLE)) AS BIGINT) AS v,
+    Some(s"""WITH pts AS (SELECT
+                    ${Det.sqlCents("value")} AS v,
                     CAST(floor(CAST(((('0x' || substr(md5(
                       CAST(event_id AS VARCHAR) || 'x'), 1, 8))::BIGINT)
                       % 1024 + 1024) % 1024 AS DOUBLE)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType}
 import graft.{Det, Q}
+import graft.Det.Dec0
 import graft.sources.Tables
 
 /** Window functions, sorts/limits, set operations — SURVEY.md §2.E–§2.G.
@@ -770,9 +771,9 @@ object Windows {
         .drop("sid")
         .orderBy("user_id", "session_start")
     },
-    Some("""WITH brk AS (
+    Some(s"""WITH brk AS (
               SELECT user_id, ts, event_id,
-                     CAST(round(value * 100) AS BIGINT) AS c,
+                     ${Det.sqlRoundCents("value")} AS c,
                      CASE WHEN epoch_us(ts) - epoch_us(lag(ts) OVER
                             (PARTITION BY user_id ORDER BY ts, event_id))
                           >= 1800000000 THEN 1 ELSE 0 END AS b
@@ -815,11 +816,10 @@ object Windows {
         .select("o_orderkey", "o_orderpriority", "cd")
         .orderBy("o_orderkey")
     },
-    Some("""SELECT o_orderkey, o_orderpriority, cd
+    Some(s"""SELECT o_orderkey, o_orderpriority, cd
             FROM (SELECT o_orderkey, o_orderpriority,
                          cume_dist() OVER (PARTITION BY o_orderpriority
-                           ORDER BY CAST(round(o_totalprice * 100)
-                                         AS BIGINT)) AS cd
+                           ORDER BY ${Det.sqlRoundCents("o_totalprice")}) AS cd
                   FROM orders)
             ORDER BY o_orderkey"""))
 
@@ -885,12 +885,12 @@ object Windows {
         .select("o_orderkey", "o_orderpriority", "share")
         .orderBy("o_orderkey")
     },
-    Some("""SELECT o_orderkey, o_orderpriority,
+    Some(s"""SELECT o_orderkey, o_orderpriority,
                    CAST(cents AS DOUBLE) /
                    CAST(sum(cents) OVER (PARTITION BY o_orderpriority)
                         AS DOUBLE) AS share
             FROM (SELECT o_orderkey, o_orderpriority,
-                         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+                         ${Det.sqlRoundCents("o_totalprice")} AS cents
                   FROM orders)
             ORDER BY o_orderkey"""))
 
@@ -922,12 +922,12 @@ object Windows {
         .select("s_nationkey", "drk", "s_suppkey", "bal_cents")
         .orderBy("s_nationkey", "drk", "s_suppkey")
     },
-    Some("""SELECT s_nationkey, drk, s_suppkey, bal_cents
+    Some(s"""SELECT s_nationkey, drk, s_suppkey, bal_cents
             FROM (SELECT s_nationkey, s_suppkey,
-                         CAST(round(s_acctbal * 100) AS BIGINT)
+                         ${Det.sqlRoundCents("s_acctbal")}
                            AS bal_cents,
                          CAST(dense_rank() OVER (PARTITION BY s_nationkey
-                           ORDER BY CAST(round(s_acctbal * 100) AS BIGINT)
+                           ORDER BY ${Det.sqlRoundCents("s_acctbal")}
                            DESC) AS INTEGER) AS drk
                   FROM supplier)
             WHERE drk <= 5 ORDER BY s_nationkey, drk, s_suppkey"""))
@@ -1589,8 +1589,7 @@ object Windows {
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("ts"),
           to_date(col("ts")).as("day"), col("event_type"),
-          expr("CAST(floor(value * CAST(100.0 AS DOUBLE) " +
-            "+ CAST(0.5 AS DOUBLE)) AS BIGINT)").as("c"))
+          Det.cents("value").as("c"))
       val purchases = ev.where(col("event_type") === "purchase")
         .select(col("event_id").as("pid"), col("user_id"), col("day"),
           col("ts").as("pts"), col("c"))
@@ -1624,10 +1623,9 @@ object Windows {
           "CAST(credit_micro AS DOUBLE) / CAST(100000 AS DOUBLE)"))
         .orderBy("touch_type")
     },
-    Some("""WITH ev AS (SELECT event_id, user_id, ts,
+    Some(s"""WITH ev AS (SELECT event_id, user_id, ts,
                     CAST(ts AS DATE) AS day, event_type,
-                    CAST(floor(value * CAST(100.0 AS DOUBLE)
-                      + CAST(0.5 AS DOUBLE)) AS BIGINT) AS c
+                    ${Det.sqlCents("value")} AS c
                   FROM events),
              p AS (SELECT event_id AS pid, user_id, day, ts AS pts, c
                    FROM ev WHERE event_type = 'purchase'),
@@ -1678,13 +1676,12 @@ object Windows {
   val qWinParetoAbc = Q(
     "q_win_pareto_abc",
     (s, dir) => {
-      val dec12 = org.apache.spark.sql.types.DecimalType(38, 12)
       val byPart = Tables.lineitem(s, dir)
         .groupBy("l_partkey")
         .agg(Det.dsum(col("l_extendedprice")).as("rev"))
         .localCheckpoint()
       val tot = byPart.agg(
-        sum(col("rev").cast(dec12)).as("tot_d"))
+        sum(col("rev").cast(Det.Dec12)).as("tot_d"))
       // value rides as DECIMAL(26,12): per-bucket sums promote to
       // (36,12), Prefix.runningSum narrows the cross-bucket offsets back
       // to (36,12) (exact: the grand total fits 24 integer digits), and
@@ -1845,15 +1842,13 @@ object Windows {
   val qWinVwap = Q(
     "q_win_vwap",
     (s, dir) => {
-      val Dec0 = org.apache.spark.sql.types.DecimalType(38, 0)
       val wRun = Window.partitionBy("flag").orderBy("d")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       Tables.lineitem(s, dir)
         .select(col("l_returnflag").as("flag"),
           to_date(col("l_shipdate")).as("d"),
           col("l_quantity").cast("long").as("q"),
-          expr("CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE) " +
-            "+ CAST(0.5 AS DOUBLE)) AS BIGINT)").as("y"))
+          Det.cents("l_extendedprice").as("y"))
         .groupBy("flag", "d")
         .agg(sum(col("q").cast(Dec0)).as("qty_day"),
           sum((col("q") * col("y")).cast(Dec0)).as("notional_day"))
@@ -1866,12 +1861,11 @@ object Windows {
           expr("cn / cq").as("vwap_cents"))
         .orderBy("flag", "d")
     },
-    Some("""WITH daily AS (
+    Some(s"""WITH daily AS (
               SELECT l_returnflag AS flag, CAST(l_shipdate AS DATE) AS d,
                 CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty_day,
                 CAST(SUM(CAST(l_quantity AS BIGINT)
-                  * CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE)
-                    + CAST(0.5 AS DOUBLE)) AS BIGINT)) AS BIGINT)
+                  * ${Det.sqlCents("l_extendedprice")}) AS BIGINT)
                   AS notional_day
               FROM lineitem GROUP BY 1, 2),
              run AS (SELECT flag, d, qty_day,
@@ -1912,14 +1906,8 @@ object Windows {
   val qWinBollinger = Q(
     "q_win_bollinger",
     (s, dir) => {
-      val Dec0 = org.apache.spark.sql.types.DecimalType(38, 0)
       val wFrame = Window.partitionBy("flag").orderBy("d").rowsBetween(-6, 0)
-      Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag").as("flag"),
-          to_date(col("l_shipdate")).as("d"))
-        .agg(sum(expr("CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE)" +
-          " + CAST(0.5 AS DOUBLE)) AS BIGINT)").cast(Dec0))
-          .cast(Dec0).as("v"))
+      Det.dailyCents(s, dir, "v", dec0 = true)
         .withColumn("n", count(lit(1)).over(wFrame))
         .withColumn("sv", sum(col("v")).over(wFrame))
         .withColumn("svv", sum(col("v") * col("v")).over(wFrame))
@@ -1932,11 +1920,7 @@ object Windows {
         .orderBy("flag", "d")
     },
     Some(s"""WITH daily AS (
-              SELECT l_returnflag AS flag, CAST(l_shipdate AS DATE) AS d,
-                CAST(SUM(CAST(floor(l_extendedprice
-                  * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT))
-                  AS HUGEINT) AS v
-              FROM lineitem GROUP BY 1, 2),
+              ${Det.sqlDailyCents("v", dec0 = true)}),
              f AS (SELECT flag, d,
                  count(*) OVER w AS n,
                  SUM(v) OVER w AS sv,
@@ -1949,6 +1933,17 @@ object Windows {
                    ($bollMid) - CAST(2.0 AS DOUBLE) * ($bollSd) AS lower,
                    ($bollMid) + CAST(2.0 AS DOUBLE) * ($bollSd) AS upper
             FROM f ORDER BY flag, d"""))
+
+  /** Pearson r over the DOUBLE pair sums n, sx, sy, sxy, sxx, syy:
+    * (nΣxy − ΣxΣy) / (sqrt(nΣx² − Σx²)·sqrt(nΣy² − Σy²)), NULL when either
+    * variance term is ≤ 0. One text for both engines of q_win_rolling_corr,
+    * q_time_autocorr and q_time_crosscorr.
+    */
+  private val corrFml =
+    "CASE WHEN n * sxx - sx * sx <= CAST(0 AS DOUBLE) " +
+      "OR n * syy - sy * sy <= CAST(0 AS DOUBLE) THEN NULL " +
+      "ELSE (n * sxy - sx * sy) / " +
+      "(sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy)) END"
 
   /** Rolling 7-row Pearson correlation between the daily revenue and
     * daily volume series per return flag — the co-movement monitor
@@ -1966,20 +1961,9 @@ object Windows {
   val qWinRollingCorr = Q(
     "q_win_rolling_corr",
     (s, dir) => {
-      val Dec0 = org.apache.spark.sql.types.DecimalType(38, 0)
       val wFrame = Window.partitionBy("flag").orderBy("d").rowsBetween(-6, 0)
-      val corrFml =
-        "CASE WHEN n * sxx - sx * sx <= CAST(0 AS DOUBLE) " +
-          "OR n * syy - sy * sy <= CAST(0 AS DOUBLE) THEN NULL " +
-          "ELSE (n * sxy - sx * sy) / " +
-          "(sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy)) END"
-      Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag").as("flag"),
-          to_date(col("l_shipdate")).as("d"))
-        .agg(sum(expr("CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE)" +
-          " + CAST(0.5 AS DOUBLE)) AS BIGINT)").cast(Dec0))
-          .cast(Dec0).as("x"),
-          count(lit(1)).cast(Dec0).as("y"))
+      Det.dailyCents(s, dir, "x", dec0 = true,
+          more = Seq(count(lit(1)).cast(Dec0).as("y")))
         .withColumn("nn", count(lit(1)).over(wFrame))
         .withColumn("sxd", sum(col("x")).over(wFrame))
         .withColumn("syd", sum(col("y")).over(wFrame))
@@ -1999,19 +1983,9 @@ object Windows {
           expr(corrFml).as("r"))
         .orderBy("flag", "d")
     },
-    Some {
-      val corrFml =
-        """CASE WHEN n * sxx - sx * sx <= CAST(0 AS DOUBLE)
-             OR n * syy - sy * sy <= CAST(0 AS DOUBLE) THEN NULL
-           ELSE (n * sxy - sx * sy) /
-             (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy)) END"""
-      s"""WITH daily AS (
-              SELECT l_returnflag AS flag, CAST(l_shipdate AS DATE) AS d,
-                CAST(SUM(CAST(floor(l_extendedprice
-                  * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT))
-                  AS HUGEINT) AS x,
-                CAST(count(*) AS HUGEINT) AS y
-              FROM lineitem GROUP BY 1, 2),
+    Some(s"""WITH daily AS (
+              ${Det.sqlDailyCents("x", dec0 = true,
+                  more = Seq("CAST(count(*) AS HUGEINT) AS y"))}),
              f AS (SELECT flag, d,
                  count(*) OVER w AS n_days,
                  CAST(count(*) OVER w AS DOUBLE) AS n,
@@ -2025,8 +1999,7 @@ object Windows {
                  ROWS BETWEEN 6 PRECEDING AND CURRENT ROW))
             SELECT flag, CAST(d AS TIMESTAMP) AS d, n_days,
                    $corrFml AS r
-            FROM f ORDER BY flag, d"""
-    })
+            FROM f ORDER BY flag, d"""))
 
   /** Autocorrelation function (ACF, lags 1–7) — the seasonality DETECTOR
     * (q_seasonal_dow assumes the week; ACF measures which lag actually
@@ -2042,19 +2015,8 @@ object Windows {
   val qTimeAutocorr = Q(
     "q_time_autocorr",
     (s, dir) => {
-      val Dec0 = org.apache.spark.sql.types.DecimalType(38, 0)
       val w = Window.partitionBy("flag").orderBy("d")
-      val corrFml =
-        "CASE WHEN n * sxx - sx * sx <= CAST(0 AS DOUBLE) " +
-          "OR n * syy - sy * sy <= CAST(0 AS DOUBLE) THEN NULL " +
-          "ELSE (n * sxy - sx * sy) / " +
-          "(sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy)) END"
-      var daily = Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag").as("flag"),
-          to_date(col("l_shipdate")).as("d"))
-        .agg(sum(expr("CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE)" +
-          " + CAST(0.5 AS DOUBLE)) AS BIGINT)").cast(Dec0))
-          .cast(Dec0).as("y"))
+      var daily = Det.dailyCents(s, dir, "y", dec0 = true)
       for (k <- 1 to 7)
         daily = daily.withColumn(s"l$k", lag(col("y"), k).over(w))
       daily
@@ -2081,22 +2043,13 @@ object Windows {
         .orderBy("flag", "k")
     },
     Some {
-      val corrFml =
-        """CASE WHEN n * sxx - sx * sx <= CAST(0 AS DOUBLE)
-             OR n * syy - sy * sy <= CAST(0 AS DOUBLE) THEN NULL
-           ELSE (n * sxy - sx * sy) /
-             (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy)) END"""
       val lagCols = (1 to 7).map(k => s"lag(y, $k) OVER w AS l$k")
         .mkString(", ")
       val unions = (1 to 7).map(k =>
         s"SELECT flag, $k AS k, y, l$k AS x FROM l WHERE l$k IS NOT NULL")
         .mkString(" UNION ALL ")
       s"""WITH daily AS (
-              SELECT l_returnflag AS flag, CAST(l_shipdate AS DATE) AS d,
-                CAST(SUM(CAST(floor(l_extendedprice
-                  * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT))
-                  AS HUGEINT) AS y
-              FROM lineitem GROUP BY 1, 2),
+              ${Det.sqlDailyCents("y", dec0 = true)}),
              l AS (SELECT flag, y, $lagCols FROM daily
                    WINDOW w AS (PARTITION BY flag ORDER BY d)),
              st AS (SELECT flag, k, y, x FROM ($unions)),
@@ -2353,7 +2306,6 @@ object Windows {
   val qWinRollingOls = Q(
     "q_win_rolling_ols",
     (s, dir) => {
-      val Dec0 = org.apache.spark.sql.types.DecimalType(38, 0)
       val wFrame = Window.partitionBy("flag").orderBy("d").rowsBetween(-6, 0)
       val slopeFml =
         "CASE WHEN n * sxx - sx * sx <= CAST(0 AS DOUBLE) THEN NULL " +
@@ -2361,12 +2313,7 @@ object Windows {
       val interceptFml =
         s"CASE WHEN ($slopeFml) IS NULL THEN NULL " +
           s"ELSE (sy - ($slopeFml) * sx) / n END"
-      Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag").as("flag"),
-          to_date(col("l_shipdate")).as("d"))
-        .agg(sum(expr("CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE)" +
-          " + CAST(0.5 AS DOUBLE)) AS BIGINT)").cast(Dec0))
-          .cast(Dec0).as("y"))
+      Det.dailyCents(s, dir, "y", dec0 = true)
         .withColumn("x",
           datediff(col("d"), lit("1970-01-01").cast("date")).cast(Dec0))
         .withColumn("nn", count(lit(1)).over(wFrame))
@@ -2395,8 +2342,7 @@ object Windows {
             ELSE (sy - ($slopeFml) * sx) / n END"""
       s"""WITH daily AS (
               SELECT l_returnflag AS flag, CAST(l_shipdate AS DATE) AS d,
-                CAST(SUM(CAST(floor(l_extendedprice
-                  * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT))
+                CAST(SUM(${Det.sqlCents("l_extendedprice")})
                   AS HUGEINT) AS y,
                 CAST(datediff('day', DATE '1970-01-01',
                   CAST(l_shipdate AS DATE)) AS HUGEINT) AS x
@@ -2608,11 +2554,6 @@ object Windows {
   val qTimeCrosscorr = Q(
     "q_time_crosscorr",
     (s, dir) => {
-      val corrFml =
-        "CASE WHEN n * sxx - sx * sx <= CAST(0 AS DOUBLE) " +
-          "OR n * syy - sy * sy <= CAST(0 AS DOUBLE) THEN NULL " +
-          "ELSE (n * sxy - sx * sy) / " +
-          "(sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy)) END"
       val daily = Tables.events(s, dir)
         .groupBy(to_date(col("ts")).as("d"))
         .agg(
@@ -2642,13 +2583,7 @@ object Windows {
         .select(col("lag"), col("n_days"), expr(corrFml).as("xcf"))
         .orderBy("lag")
     },
-    Some {
-      val corrFml =
-        """CASE WHEN n * sxx - sx * sx <= CAST(0 AS DOUBLE)
-             OR n * syy - sy * sy <= CAST(0 AS DOUBLE) THEN NULL
-           ELSE (n * sxy - sx * sy) /
-             (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy)) END"""
-      s"""WITH daily AS (SELECT CAST(ts AS DATE) AS d,
+    Some(s"""WITH daily AS (SELECT CAST(ts AS DATE) AS d,
                    CAST(SUM(CASE WHEN event_type = 'view' THEN 1
                             ELSE 0 END) AS BIGINT) AS x,
                    CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1
@@ -2667,8 +2602,7 @@ object Windows {
                      CAST(SUM(y * y) AS DOUBLE) AS syy
                    FROM j GROUP BY k)
             SELECT CAST(k AS INTEGER) AS lag, n_days, $corrFml AS xcf
-            FROM f ORDER BY lag"""
-    })
+            FROM f ORDER BY lag"""))
 
   /** Regex PATTERN MATCHING over per-user event sequences — the
     * MATCH_RECOGNIZE-shaped operator (SQL:2016 row pattern matching;
@@ -2741,11 +2675,7 @@ object Windows {
       val rsiFml = "CASE WHEN sg + sl = 0 THEN NULL " +
         "ELSE CAST(100.0 AS DOUBLE) * CAST(sg AS DOUBLE) " +
         "/ (CAST(sg AS DOUBLE) + CAST(sl AS DOUBLE)) END"
-      Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag").as("flag"),
-          to_date(col("l_shipdate")).as("d"))
-        .agg(sum(expr("CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE)" +
-          " + CAST(0.5 AS DOUBLE)) AS BIGINT)")).as("v"))
+      Det.dailyCents(s, dir, "v")
         .withColumn("delta", col("v") - lag(col("v"), 1).over(wLag))
         .where(col("delta").isNotNull)
         .withColumn("n14", count(lit(1)).over(wFrame))
@@ -2759,12 +2689,8 @@ object Windows {
           col("sg"), col("sl"), expr(rsiFml).as("rsi"))
         .orderBy("flag", "d")
     },
-    Some("""WITH daily AS (
-              SELECT l_returnflag AS flag, CAST(l_shipdate AS DATE) AS d,
-                CAST(SUM(CAST(floor(l_extendedprice
-                  * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT))
-                  AS BIGINT) AS v
-              FROM lineitem GROUP BY 1, 2),
+    Some(s"""WITH daily AS (
+              ${Det.sqlDailyCents("v")}),
              dl AS (SELECT flag, d,
                       v - lag(v, 1) OVER (PARTITION BY flag ORDER BY d)
                         AS delta
@@ -2806,11 +2732,7 @@ object Windows {
         "ELSE CAST(100.0 AS DOUBLE) * (CAST(v AS DOUBLE) " +
         "- CAST(lo AS DOUBLE)) / (CAST(hi AS DOUBLE) " +
         "- CAST(lo AS DOUBLE)) END"
-      Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag").as("flag"),
-          to_date(col("l_shipdate")).as("d"))
-        .agg(sum(expr("CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE)" +
-          " + CAST(0.5 AS DOUBLE)) AS BIGINT)")).as("v"))
+      Det.dailyCents(s, dir, "v")
         .withColumn("n14", count(lit(1)).over(wFrame))
         .withColumn("lo", min(col("v")).over(wFrame))
         .withColumn("hi", max(col("v")).over(wFrame))
@@ -2825,12 +2747,8 @@ object Windows {
           col("lo"), col("hi"), col("k").as("pct_k"), col("pct_d"))
         .orderBy("flag", "d")
     },
-    Some("""WITH daily AS (
-              SELECT l_returnflag AS flag, CAST(l_shipdate AS DATE) AS d,
-                CAST(SUM(CAST(floor(l_extendedprice
-                  * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT))
-                  AS BIGINT) AS v
-              FROM lineitem GROUP BY 1, 2),
+    Some(s"""WITH daily AS (
+              ${Det.sqlDailyCents("v")}),
              fr AS (SELECT flag, d, v,
                       count(*) OVER w AS n14,
                       CAST(min(v) OVER w AS BIGINT) AS lo,
@@ -2869,8 +2787,7 @@ object Windows {
       Tables.orders(s, dir)
         .select(col("o_orderpriority").as("pr"),
           to_date(col("o_orderdate")).as("d"), col("o_orderkey"),
-          expr("CAST(floor(o_totalprice * CAST(100.0 AS DOUBLE) " +
-            "+ CAST(0.5 AS DOUBLE)) AS BIGINT)").as("cents"))
+          Det.cents("o_totalprice").as("cents"))
         .groupBy("pr", "d")
         .agg(max(col("cents")).as("hi"), min(col("cents")).as("lo"),
           max_by(col("cents"), col("o_orderkey")).as("cl"))
@@ -2887,14 +2804,13 @@ object Windows {
           expr("CAST(str AS DOUBLE) / CAST(14.0 AS DOUBLE)").as("atr"))
         .orderBy("pr", "d")
     },
-    Some("""WITH bars AS (
+    Some(s"""WITH bars AS (
               SELECT o_orderpriority AS pr, CAST(o_orderdate AS DATE) AS d,
                 CAST(max(cents) AS BIGINT) AS hi,
                 CAST(min(cents) AS BIGINT) AS lo,
                 CAST(max_by(cents, o_orderkey) AS BIGINT) AS cl
               FROM (SELECT o_orderpriority, o_orderdate, o_orderkey,
-                      CAST(floor(o_totalprice * CAST(100.0 AS DOUBLE)
-                        + CAST(0.5 AS DOUBLE)) AS BIGINT) AS cents
+                      ${Det.sqlCents("o_totalprice")} AS cents
                     FROM orders)
               GROUP BY 1, 2),
              tr AS (SELECT pr, d,
@@ -2931,12 +2847,7 @@ object Windows {
     (s, dir) => {
       val wLag = Window.partitionBy("flag").orderBy("d")
       val wRun = wLag.rowsBetween(Window.unboundedPreceding, 0)
-      Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag").as("flag"),
-          to_date(col("l_shipdate")).as("d"))
-        .agg(sum(expr("CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE)" +
-          " + CAST(0.5 AS DOUBLE)) AS BIGINT)")).as("v"),
-          count(lit(1)).as("vol"))
+      Det.dailyCents(s, dir, "v", more = Seq(count(lit(1)).as("vol")))
         .withColumn("delta", col("v") - lag(col("v"), 1).over(wLag))
         .withColumn("flow", expr("CASE WHEN delta IS NULL OR delta = 0" +
           " THEN 0 WHEN delta > 0 THEN vol ELSE -vol END"))
@@ -2946,13 +2857,9 @@ object Windows {
           col("v"), col("vol"), col("flow"), col("obv"))
         .orderBy("flag", "d")
     },
-    Some("""WITH daily AS (
-              SELECT l_returnflag AS flag, CAST(l_shipdate AS DATE) AS d,
-                CAST(SUM(CAST(floor(l_extendedprice
-                  * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT))
-                  AS BIGINT) AS v,
-                CAST(count(*) AS BIGINT) AS vol
-              FROM lineitem GROUP BY 1, 2),
+    Some(s"""WITH daily AS (
+              ${Det.sqlDailyCents("v",
+                  more = Seq("CAST(count(*) AS BIGINT) AS vol"))}),
              dl AS (SELECT flag, d, v, vol,
                       v - lag(v, 1) OVER (PARTITION BY flag ORDER BY d)
                         AS delta
@@ -2986,11 +2893,7 @@ object Windows {
       val wLag = Window.partitionBy("flag").orderBy("d")
       val wRun = wLag.rowsBetween(Window.unboundedPreceding, 0)
       val wFrame = wLag.rowsBetween(-13, 0)
-      Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag").as("flag"),
-          to_date(col("l_shipdate")).as("d"))
-        .agg(sum(expr("CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE)" +
-          " + CAST(0.5 AS DOUBLE)) AS BIGINT)")).as("v"))
+      Det.dailyCents(s, dir, "v")
         .withColumn("peak", max(col("v")).over(wRun))
         .withColumn("dd2", expr("CAST(" +
           "((CAST(peak AS DOUBLE) - CAST(v AS DOUBLE))" +
@@ -3006,12 +2909,8 @@ object Windows {
           expr("sqrt(CAST(sdd2 AS DOUBLE) / 14.0)").as("ulcer"))
         .orderBy("flag", "d")
     },
-    Some("""WITH daily AS (
-              SELECT l_returnflag AS flag, CAST(l_shipdate AS DATE) AS d,
-                CAST(SUM(CAST(floor(l_extendedprice
-                  * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE)) AS BIGINT))
-                  AS BIGINT) AS v
-              FROM lineitem GROUP BY 1, 2),
+    Some(s"""WITH daily AS (
+              ${Det.sqlDailyCents("v")}),
              pk AS (SELECT flag, d, v,
                       CAST(max(v) OVER (PARTITION BY flag ORDER BY d
                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
@@ -3053,7 +2952,7 @@ object Windows {
       val o = Tables.orders(s, dir)
         .select(col("o_orderpriority").as("pri"),
           col("o_orderkey").as("ok"),
-          round(col("o_totalprice") * 100).cast("long").as("cents"))
+          Det.roundCents("o_totalprice").as("cents"))
       val budgets = o.groupBy("pri")
         .agg(expr("sum(cents) DIV 2").as("budget"))
       val bucketed = graft.operators.Prefix.withGroupRangeBucket(
@@ -3077,9 +2976,9 @@ object Windows {
           sum(greatest(col("alloc"), lit(0L))).as("alloc_cents"))
         .orderBy("pri")
     },
-    Some("""WITH o AS (SELECT o_orderpriority AS pri,
+    Some(s"""WITH o AS (SELECT o_orderpriority AS pri,
                     o_orderkey AS ok,
-                    CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+                    ${Det.sqlRoundCents("o_totalprice")} AS cents
                   FROM orders),
              b AS (SELECT pri, CAST(sum(cents) // 2 AS BIGINT) AS budget
                    FROM o GROUP BY pri),
@@ -3192,8 +3091,7 @@ object Windows {
       Tables.events(s, dir)
         .select(col("event_type"), col("ts"), col("event_id"),
           unix_micros(col("ts")).as("us"),
-          expr("CAST(floor(value * CAST(100.0 AS DOUBLE)" +
-            " + CAST(0.5 AS DOUBLE)) AS BIGINT)").as("cents"))
+          Det.cents("value").as("cents"))
         .withColumn("dur", lead(col("us"), 1).over(w) - col("us"))
         .where(col("dur").isNotNull)
         .groupBy("event_type")
@@ -3210,10 +3108,9 @@ object Windows {
             .as("plain_mean_cents"))
         .orderBy("event_type")
     },
-    Some("""WITH e AS (SELECT event_type,
+    Some(s"""WITH e AS (SELECT event_type,
                     epoch_us(ts) AS us,
-                    CAST(floor(value * CAST(100.0 AS DOUBLE)
-                      + CAST(0.5 AS DOUBLE)) AS BIGINT) AS cents,
+                    ${Det.sqlCents("value")} AS cents,
                     lead(epoch_us(ts)) OVER (PARTITION BY event_type
                       ORDER BY ts, event_id) - epoch_us(ts) AS dur
                   FROM events),
@@ -3246,11 +3143,7 @@ object Windows {
     "q_win_sharpe",
     (s, dir) => {
       val w = Window.partitionBy("flag").orderBy("d")
-      val daily = Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag").as("flag"),
-          to_date(col("l_shipdate")).as("d"))
-        .agg(sum(expr("CAST(floor(l_extendedprice * CAST(100.0 AS DOUBLE)" +
-          " + CAST(0.5 AS DOUBLE)) AS BIGINT)")).as("y"))
+      val daily = Det.dailyCents(s, dir, "y")
       val ret = daily
         .withColumn("yp", lag(col("y"), 1).over(w))
         .where(col("yp").isNotNull && col("yp") =!= 0L)
@@ -3275,12 +3168,7 @@ object Windows {
             " * sqrt(CAST(252 AS DOUBLE)), 6) END").as("sharpe_ann"))
         .orderBy("flag")
     },
-    Some("""WITH daily AS (SELECT l_returnflag AS flag,
-                    CAST(l_shipdate AS DATE) AS d,
-                    CAST(SUM(CAST(floor(l_extendedprice
-                      * CAST(100.0 AS DOUBLE) + CAST(0.5 AS DOUBLE))
-                      AS BIGINT)) AS BIGINT) AS y
-                  FROM lineitem GROUP BY 1, 2),
+    Some(s"""WITH daily AS (${Det.sqlDailyCents("y")}),
              ret AS (SELECT flag,
                        CAST(y - yp AS DOUBLE) / CAST(yp AS DOUBLE) AS r
                      FROM (SELECT flag, y,

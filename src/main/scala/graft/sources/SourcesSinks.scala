@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, StructField, StructType}
-import graft.Q
+import graft.{Det, Q}
 
 /** File-format sources and sinks — SURVEY.md §2.A (○ unit-tested surface).
   *
@@ -339,8 +339,8 @@ object SourcesSinks {
           max(col("c_custkey")).as("max_key"))
         .orderBy("c_mktsegment")
     },
-    Some("""SELECT c_mktsegment, count(*) AS n,
-                   CAST(sum(CAST(round(c_acctbal * 100) AS BIGINT))
+    Some(s"""SELECT c_mktsegment, count(*) AS n,
+                   CAST(sum(${Det.sqlRoundCents("c_acctbal")})
                      AS BIGINT) AS sum_cents,
                    min(c_custkey) AS min_key, max(c_custkey) AS max_key
             FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment"""))
@@ -372,8 +372,8 @@ object SourcesSinks {
           max(col("o_orderkey")).as("max_key"))
         .orderBy("o_orderpriority")
     },
-    Some("""SELECT o_orderpriority, count(*) AS n,
-                   CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
+    Some(s"""SELECT o_orderpriority, count(*) AS n,
+                   CAST(sum(${Det.sqlRoundCents("o_totalprice")})
                      AS BIGINT) AS sum_cents,
                    min(o_orderkey) AS min_key, max(o_orderkey) AS max_key
             FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority"""))
@@ -402,8 +402,8 @@ object SourcesSinks {
           max(col("p_partkey")).as("max_key"))
         .orderBy("p_brand")
     },
-    Some("""SELECT p_brand, count(*) AS n,
-                   CAST(sum(CAST(round(p_retailprice * 100) AS BIGINT))
+    Some(s"""SELECT p_brand, count(*) AS n,
+                   CAST(sum(${Det.sqlRoundCents("p_retailprice")})
                      AS BIGINT) AS sum_cents,
                    min(p_partkey) AS min_key, max(p_partkey) AS max_key
             FROM part GROUP BY p_brand ORDER BY p_brand"""))
@@ -1023,8 +1023,8 @@ object SourcesSinks {
           sum(coalesce(col("p_size"), lit(0))).as("size_sum"))
         .orderBy("p_brand")
     },
-    Some("""SELECT p_brand, count(*) AS n,
-                   CAST(sum(CAST(round(p_retailprice * 100) AS BIGINT))
+    Some(s"""SELECT p_brand, count(*) AS n,
+                   CAST(sum(${Det.sqlRoundCents("p_retailprice")})
                      AS BIGINT) AS sum_cents,
                    count(CASE WHEN p_partkey % 2 = 1 THEN p_size END)
                      AS n_sized,
@@ -1106,7 +1106,7 @@ object SourcesSinks {
       Incremental.withBuildLock(root) {
         if (ManifestTable.latestVersion(root) < 3) {
           val o = Tables.orders(s, dir).select(col("o_orderkey"),
-            round(col("o_totalprice") * 100).cast("long").as("cents"),
+            Det.roundCents("o_totalprice").as("cents"),
             col("o_orderpriority").as("pri"))
           ManifestTable.commit(s, root,
             o.where(pmod(col("o_orderkey"), lit(3)) === 0),
@@ -1127,8 +1127,8 @@ object SourcesSinks {
             col("sum_cents"), col("n_keys"))
       }.reduce(_.unionAll(_)).orderBy("version")
     },
-    Some("""WITH o AS (SELECT o_orderkey,
-                    CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
+    Some(s"""WITH o AS (SELECT o_orderkey,
+                    ${Det.sqlRoundCents("o_totalprice")} AS cents,
                     o_orderpriority AS pri
                   FROM orders)
             SELECT 1 AS version, CAST(count(*) AS BIGINT) AS n_rows,

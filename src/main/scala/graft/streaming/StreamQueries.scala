@@ -105,14 +105,14 @@ object StreamQueries {
     "q_stream_window_topk",
     (s, dir) =>
       rankWindows(windowSpend(Tables.events(s, dir))).orderBy("ws", "rk"),
-    Some("""SELECT ws, user_id, spend_cents, rk
+    Some(s"""SELECT ws, user_id, spend_cents, rk
             FROM (SELECT ws, user_id, spend_cents,
                          CAST(row_number() OVER (PARTITION BY ws
                            ORDER BY spend_cents DESC, user_id)
                            AS INTEGER) AS rk
                   FROM (SELECT time_bucket(INTERVAL '1 hour', ts) AS ws,
                                user_id,
-                               CAST(sum(CAST(round(value * 100) AS BIGINT))
+                               CAST(sum(${Det.sqlRoundCents("value")})
                                  AS BIGINT) AS spend_cents
                         FROM events WHERE event_type = 'purchase'
                         GROUP BY ws, user_id))
@@ -463,13 +463,13 @@ object StreamQueries {
     (s, dir) =>
       anomalyScores(Tables.events(s, dir))
         .orderBy("user_id", "ts", "event_id"),
-    Some("""WITH m AS (
+    Some(s"""WITH m AS (
               SELECT event_id, user_id, ts,
-                     CAST(round(value * 100) AS BIGINT) AS c,
+                     ${Det.sqlRoundCents("value")} AS c,
                      count(c2) OVER w AS n,
                      CAST(sum(c2) OVER w AS BIGINT) AS s,
                      CAST(sum(c2 * c2) OVER w AS BIGINT) AS ss
-              FROM (SELECT *, CAST(round(value * 100) AS BIGINT) AS c2
+              FROM (SELECT *, ${Det.sqlRoundCents("value")} AS c2
                     FROM events)
               WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
                            ROWS BETWEEN UNBOUNDED PRECEDING
