@@ -87,9 +87,16 @@ object Det {
   /** Money to integer cents via the engines' round(x·100). Not
     * interchangeable with `sqlCents`: the float addition in x·100 + 0.5
     * can round up to the next integer where round(x·100) does not, so a
-    * query keeps whichever rule its oracle was written with.
+    * query keeps whichever rule its oracle was written with. Out of
+    * BIGINT range it raises in both engines by the same added guard term
+    * as `sqlCents`: Spark's DOUBLE→BIGINT cast alone lets 2^63 through.
     */
-  def sqlRoundCents(x: String): String = s"CAST(round($x * 100) AS BIGINT)"
+  def sqlRoundCents(x: String): String = {
+    val v = s"$x * 100"
+    val lim = "CAST(9223372036854775807 AS DOUBLE)" // 2^63 once rounded
+    s"CAST(round($v) + CASE WHEN $v >= -$lim AND $v < $lim THEN 0 " +
+      s"ELSE CAST($v AS INT) END AS BIGINT)"
+  }
   def roundCents(x: String): Column = expr(sqlRoundCents(x))
 
   /** The daily revenue series: lineitem grouped by return flag (AS

@@ -141,9 +141,8 @@ object Layout {
     * and aggregate. The oracle runs the same aggregate on the ORIGINAL
     * parquet table, so a hash match certifies no row was lost, duplicated
     * or altered by fragment→compact. The fixture + rewrite are built once
-    * per (session, input dir) behind the Incremental freshness guard
-    * (compacted _SUCCESS lands after the fragment's, so one check covers
-    * both); re-runs read the compacted parquet directly.
+    * per (session, input dir) as one two-output Incremental store;
+    * re-runs read the compacted parquet directly.
     */
   val qLayoutCompact = Q(
     "q_layout_compact",
@@ -152,25 +151,20 @@ object Layout {
         .dirKeyedTempPath(s, dir, "compact_small")
       val bigOut = graft.sources.SourcesSinks
         .dirKeyedTempPath(s, dir, "compact_big")
-      val inputs = Seq(s"$dir/orders.parquet")
-      if (!graft.sources.Incremental.isFresh(s, inputs, smallOut) ||
-          !graft.sources.Incremental.isFresh(s, inputs, bigOut))
-        graft.sources.Incremental.withBuildLock(bigOut) {
-        if (!graft.sources.Incremental.isFresh(s, inputs, smallOut) ||
-            !graft.sources.Incremental.isFresh(s, inputs, bigOut)) {
+      graft.sources.Incremental.store(s, Seq(s"$dir/orders.parquet"),
+          Seq(smallOut, bigOut)) {
         Tables.orders(s, dir)
           .select(col("o_orderkey"), col("o_orderstatus"),
             round(col("o_totalprice") * 100)
               .cast(DecimalType(18, 0)).cast(LongType).as("price_cents"))
           .repartition(32)
-          .write.mode("overwrite").parquet(smallOut)
+          .write.parquet(smallOut)
         val (nBefore, nAfter) =
           compact(s, smallOut, bigOut, targetBytes = 128L << 20)
         // an EMPTY/tiny input can land as a single file before compaction
         // — already minimal, nothing to reduce (empty-partition class)
         require(nAfter < nBefore || nBefore <= 1,
           s"compaction did not reduce file count ($nBefore -> $nAfter)")
-      }
       }
       s.read.parquet(bigOut)
         .groupBy("o_orderstatus")

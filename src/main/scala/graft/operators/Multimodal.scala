@@ -456,8 +456,8 @@ object Multimodal {
     * `binaryFile` ingest → `javax.imageio` decode in batched mapPartitions
     * → per-image pixel statistics. The fixture writes one real PNG per
     * sampled document (modular pixel ramp, dims from the doc id) via
-    * PER-PARTITION file writes (no driver collect), guarded by the same
-    * Incremental freshness check as the other file fixtures. PNG is
+    * PER-PARTITION file writes (no driver collect), built by the same
+    * Incremental store rule as the other file fixtures. PNG is
     * lossless, so the decoded channel sums equal the construction's — and
     * the oracle computes those sums ANALYTICALLY from the ramp formula
     * (independent-formulation doctrine: DuckDB never decodes a PNG; a
@@ -475,14 +475,8 @@ object Multimodal {
     (s, dir) => {
       import s.implicits._
       val path = SourcesSinks.dirKeyedTempPath(s, dir, "png_assets")
-      if (!Incremental.isFresh(s, Seq(s"$dir/documents.parquet"), path)) {
-        val d = new java.io.File(path)
-        Option(d.listFiles).foreach(_.foreach { f =>
-          require(f.delete(),
-            s"png-assets rebuild: could not delete stale entry $f " +
-              "(unexpected subdirectory? the build writes flat files only)")
-        })
-        d.mkdirs()
+      Incremental.store(s, Seq(s"$dir/documents.parquet"), Seq(path)) {
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
         // executor-side file writes, one task per partition — the fixture
         // never funnels media bytes through the driver
         Tables.documents(s, dir).select(col("doc_id"))
@@ -497,8 +491,6 @@ object Multimodal {
                 encodePng(w, h, rampRgb(id)))
             }
           }
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(path, "_SUCCESS"), Array.empty[Byte])
       }
       s.read.format("binaryFile").load(path)
         .where(!col("path").endsWith("_SUCCESS"))
@@ -570,13 +562,8 @@ object Multimodal {
     (s, dir) => {
       import s.implicits._
       val path = SourcesSinks.dirKeyedTempPath(s, dir, "wav_assets")
-      if (!Incremental.isFresh(s, Seq(s"$dir/documents.parquet"), path)) {
-        val d = new java.io.File(path)
-        Option(d.listFiles).foreach(_.foreach { f =>
-          require(f.delete(),
-            s"wav-assets rebuild: could not delete stale entry $f")
-        })
-        d.mkdirs()
+      Incremental.store(s, Seq(s"$dir/documents.parquet"), Seq(path)) {
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
         Tables.documents(s, dir).select(col("doc_id"))
           .where(pmod(col("doc_id"), lit(100)) === 50)
           .as[Long]
@@ -589,8 +576,6 @@ object Multimodal {
                   ((id * 31 + i * 17) % 65536 - 32768).toShort), 16000))
             }
           }
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(path, "_SUCCESS"), Array.empty[Byte])
       }
       s.read.format("binaryFile").load(path)
         .where(!col("path").endsWith("_SUCCESS"))

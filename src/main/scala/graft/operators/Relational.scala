@@ -928,21 +928,17 @@ object Relational {
     * both sides so iterations are exchange-free" posture for a cluster.
     * One write-path artifact, two query families; repeat invocations pay
     * iteration/traversal cost only.
-    */
-  /** Catalog names are keyed by an md5 of the input dir (the
+    *
+    * Catalog names are keyed by an md5 of the input dir (the
     * dirKeyedTempPath doctrine): a fixed global name would race two
     * concurrent sessions — or alias two scale dirs whose plans are built
     * before either executes — onto one warehouse location. Consumers
     * request only the table(s) they traverse: SSSP never builds the
     * degree table it doesn't read.
     */
-  private def graphKey(dir: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
   /** Bucketed undirected adjacency (both orientations, bucketed on src). */
   private[operators] def graphUnd(s: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_pr_und_${graphKey(dir)}"
+    val t = s"graft_pr_und_${graft.sources.SourcesSinks.dirKey(dir)}"
     val e = Tables.lineitem(s, dir)
       .select((col("l_partkey") * 2).as("a"),
         (col("l_suppkey") * 2 + 1).as("b"))
@@ -956,7 +952,7 @@ object Relational {
 
   /** Bucketed degree table derived from the adjacency store. */
   private[operators] def graphDeg(s: SparkSession, dir: String): DataFrame = {
-    val t = s"graft_pr_deg_${graphKey(dir)}"
+    val t = s"graft_pr_deg_${graft.sources.SourcesSinks.dirKey(dir)}"
     graft.sources.Bucketing.ensureBucketed(
       graphUnd(s, dir).groupBy("src").agg(count(lit(1)).as("deg")),
       t, "src", buckets = 32, inputs = Seq(s"$dir/lineitem.parquet"))

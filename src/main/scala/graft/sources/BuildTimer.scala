@@ -2,7 +2,7 @@ package graft.sources
 
 import java.util.concurrent.atomic.AtomicLong
 
-/** Wall-clock accumulator for STORE BUILDS (Incremental materializations,
+/** Wall-clock accumulator for STORE BUILDS (Incremental stores,
   * bucketed-table writes) so the bench can report `(build_s, query_s)`
   * separately: warm-path query cost is the number that matters at 100 TB
   * (stores amortize across a pipeline), and a build that re-fires on a

@@ -5,8 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Make-style incremental materialization — SURVEY.md §3.1/§4.1: the
   * reference's build tool skips a target when it is newer than every
-  * prerequisite. Same contract here for materialized parquet outputs: a
-  * target is fresh iff its _SUCCESS marker (written last, so its mtime
+  * prerequisite. Same contract here for every path-keyed store: a target
+  * is fresh iff its _SUCCESS marker (written last, so its mtime
   * upper-bounds the data files') is at least as new as the newest file
   * under every input path; a fresh target is read back without running the
   * build.
@@ -29,14 +29,17 @@ object Incremental {
       newest
     }
 
-  /** Is the materialized output at `outPath` newer than all inputs? */
+  /** Is every output newer than all inputs? Inputs are listed once. */
   def isFresh(spark: SparkSession, inputs: Seq[String],
-              outPath: String): Boolean = {
+              outPaths: String*): Boolean = {
     val hconf = spark.sparkContext.hadoopConfiguration
-    val success = new Path(outPath, "_SUCCESS")
-    val fs = success.getFileSystem(hconf)
-    fs.exists(success) && {
-      val outMtime = fs.getFileStatus(success).getModificationTime
+    val markers = outPaths.map { o =>
+      val m = new Path(o, "_SUCCESS")
+      val fs = m.getFileSystem(hconf)
+      if (fs.exists(m)) fs.getFileStatus(m).getModificationTime else -1L
+    }
+    markers.forall(_ >= 0) && {
+      val oldest = markers.min
       inputs.forall { in =>
         val p = new Path(in)
         val inFs = p.getFileSystem(hconf)
@@ -45,13 +48,40 @@ object Incremental {
         // serve stale materialized data for a deleted/mistyped input.
         // Make errors on a missing prerequisite; we force a rebuild, which
         // surfaces the missing path as the build's own read error.
-        inFs.exists(p) && newestMtime(inFs, p) <= outMtime
+        inFs.exists(p) && newestMtime(inFs, p) <= oldest
       }
     }
   }
 
-  /** Run `build` and write its result to `outPath` ONLY when some input is
-    * newer than the existing output (or the output does not exist); always
+  /** The one store rule. Under the build lock of the first output, when
+    * any output is older than some input (or absent): delete every output
+    * recursively, run `write` under [[BuildTimer]], then leave a _SUCCESS
+    * marker in each output as the last write — for Spark writers and
+    * hand-written files alike. `write` finds no output in place, so a
+    * Spark writer needs no save mode and a file writer creates its own
+    * directory. Returns `write`'s result when it rebuilt, None when every
+    * output was fresh and `write` never ran.
+    */
+  def store[T](spark: SparkSession, inputs: Seq[String],
+               outputs: Seq[String])(write: => T): Option[T] =
+    // checked inside the lock: the loser of a build race must see the
+    // winner's fresh output, not rebuild (or worse, delete files the
+    // winner is still writing)
+    withBuildLock(outputs.head) {
+      if (isFresh(spark, inputs, outputs: _*)) None
+      else BuildTimer.timed {
+        val hconf = spark.sparkContext.hadoopConfiguration
+        val paths = outputs.map(new Path(_))
+        paths.foreach(p => p.getFileSystem(hconf).delete(p, true))
+        val result = write
+        paths.foreach { p =>
+          p.getFileSystem(hconf).create(new Path(p, "_SUCCESS"), true).close()
+        }
+        Some(result)
+      }
+    }
+
+  /** [[store]] for one parquet target built from a DataFrame: always
     * return the materialized data read back from `outPath`, plus whether a
     * rebuild happened. The build is by-name — a skipped target never
     * constructs its plan. A target this call built is read back with the
@@ -60,16 +90,10 @@ object Incremental {
     */
   def materialize(spark: SparkSession, inputs: Seq[String], outPath: String)
                  (build: => DataFrame): (DataFrame, Boolean) = {
-    val builtSchema = withBuildLock(outPath) {
-      // double-checked inside the lock: the loser of a build race must
-      // see the winner's fresh output, not rebuild (or worse, overwrite
-      // files the winner is still writing)
-      if (isFresh(spark, inputs, outPath)) None
-      else BuildTimer.timed {
-        val built = build
-        built.write.mode("overwrite").parquet(outPath)
-        Some(built.schema)
-      }
+    val builtSchema = store(spark, inputs, Seq(outPath)) {
+      val built = build
+      built.write.parquet(outPath)
+      built.schema
     }
     val reader = builtSchema.fold(spark.read)(s => spark.read.schema(s))
     (reader.parquet(outPath), builtSchema.isDefined)
@@ -78,7 +102,7 @@ object Incremental {
   /** Serialize store BUILDS per artifact key within this JVM. Two
     * concurrent queries sharing a dir-keyed store (the pagerank/sssp
     * adjacency, the dedup pair table) otherwise both see "stale" and race
-    * `mode(overwrite)` writes — one deletes the directory under the other
+    * their writes — one deletes the directory under the other
     * (caught by ConcurrencySpec, exactly the multi-tenant hazard of a
     * shared warehouse). Same-JVM is the local[] scope; on a real cluster
     * the equivalent is the workflow manager's task-level mutual exclusion

@@ -26,8 +26,10 @@ class ConcurrencySpec extends AnyFunSuite with SparkFixture {
     // (r18): computeIfAbsent must serialize the build and hand every
     // racer the same pinned frames
     "q_dedup_jaccard_pairs", "q_dedup_containment", "q_dedup_ppjoin",
+    // two sharing the partitioned orders store
+    "q_scan_partition_pruned", "q_join_dpp",
     // independent store builders
-    "q_join_bucketed", "q_layout_zorder",
+    "q_join_bucketed", "q_layout_zorder", "q_multimodal_decode",
     // pure queries riding alongside
     "q_agg_hash", "q_win_rank_topn")
 

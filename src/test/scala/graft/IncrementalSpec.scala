@@ -124,7 +124,7 @@ class IncrementalSpec extends AnyFunSuite with SparkFixture {
     // the graph tables are BUCKETED tables (iteration-join key), so they
     // live in the warehouse dir, not the session temp root
     val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    // table names are dir-keyed (md5), mirroring Relational.graphKey
+    // table names are dir-keyed (md5), mirroring SourcesSinks.dirKey
     val key = java.security.MessageDigest.getInstance("MD5")
       .digest(sfDir.getBytes("UTF-8")).map("%02x".format(_)).mkString
     val und = Paths.get(wh, s"graft_pr_und_$key")
@@ -162,5 +162,71 @@ class IncrementalSpec extends AnyFunSuite with SparkFixture {
     SparkEntry.queries("q_sim_cosine_ivf")(spark, sfDir).count()
     assert(Files.getLastModifiedTime(cells.resolve("_SUCCESS")) == m1 &&
       Files.getLastModifiedTime(cents.resolve("_SUCCESS")) == m2)
+  }
+
+  test("every path store builds once, skips while fresh, and rebuilds " +
+      "whole and timed when its input moves") {
+    // a fresh input copy: every store starts cold, and touching an input
+    // leaves the shared fixture alone
+    val dir = tmpDir("inc_stores")
+    copyTree(Paths.get(sfDir), Paths.get(dir))
+    // (query, store tags, input table)
+    val stores = Seq(
+      ("q_sim_cosine_ivf", Seq("ivf_cells", "ivf_centroids"), "embeddings"),
+      ("q_layout_compact", Seq("compact_small", "compact_big"), "orders"),
+      ("q_multimodal_decode", Seq("png_assets"), "documents"),
+      ("q_multimodal_audio_decode", Seq("wav_assets"), "documents"),
+      ("q_source_binaryfile_roundtrip", Seq("binary_corpus"), "documents"),
+      ("q_source_csv_malformed", Seq("csv_malformed"), "customer"),
+      ("q_table_time_travel", Seq("ttravel"), "orders"),
+      // last: q_join_dpp reads its store after the loop
+      ("q_scan_partition_pruned", Seq("orders_by_status"), "orders"))
+    val failures = scala.collection.mutable.ListBuffer[String]()
+    def check(ok: Boolean, what: String): Unit = if (!ok) failures += what
+    // the query's rows, and whether the call advanced BuildTimer
+    def run(q: String) = {
+      val t0 = graft.sources.BuildTimer.snapshot
+      val rows = SparkEntry.queries(q)(spark, dir).collect().toSeq
+      (rows, graft.sources.BuildTimer.snapshot != t0)
+    }
+    stores.foreach { case (q, tags, input) =>
+      try {
+        val outs = tags.map(t => Paths.get(graft.sources.SourcesSinks
+          .dirKeyedTempPath(spark, dir, t)))
+        val (rows1, built1) = run(q)
+        check(built1, s"$q: first call ran no timed build")
+        val (rows2, built2) = run(q)
+        check(!built2, s"$q: fresh second call rebuilt")
+        check(rows2 == rows1, s"$q: fresh second call changed its rows")
+        outs.foreach { o =>
+          Files.write(o.resolve("stray.txt"), Array[Byte](1))
+          Files.createDirectories(o.resolve("stray_dir"))
+          Files.write(o.resolve("stray_dir").resolve("stray.txt"),
+            Array[Byte](1))
+        }
+        // move the input past every marker, at a time already passed, so
+        // the rebuild's marker lands after it
+        val newest = outs.map(o => Files.getLastModifiedTime(
+          o.resolve("_SUCCESS")).toMillis).max
+        while (System.currentTimeMillis() <= newest) Thread.sleep(5)
+        Files.setLastModifiedTime(Paths.get(dir, s"$input.parquet"),
+          java.nio.file.attribute.FileTime.fromMillis(
+            System.currentTimeMillis()))
+        val (rows3, built3) = run(q)
+        check(built3, s"$q: touched input did not rebuild under the timer")
+        check(rows3 == rows1, s"$q: rebuild changed its rows")
+        outs.foreach { o =>
+          check(!Files.exists(o.resolve("stray.txt")),
+            s"$q: stray file survived the rebuild in ${o.getFileName}")
+          check(!Files.exists(o.resolve("stray_dir")),
+            s"$q: stray subdirectory survived the rebuild in ${o.getFileName}")
+        }
+      } catch {
+        case e: Exception => failures += s"$q: threw $e"
+      }
+    }
+    // q_join_dpp reads the store q_scan_partition_pruned just rebuilt
+    check(!run("q_join_dpp")._2, "q_join_dpp rebuilt the shared orders store")
+    assert(failures.isEmpty, failures.mkString("\n", "\n", ""))
   }
 }
